@@ -168,8 +168,9 @@ def q_minhash_lsh_pairs(spark, sf_dir) -> DataFrame:
     d = _docs(spark, sf_dir).where(
         # short-file rule shared with the DuckDB oracle: docs with fewer than
         # shingle_k tokens have no k-shingle (the oracle drops them; without
-        # this filter add_shingles would give them a whole-token-list shingle
-        # and two near-identical 2-token docs would emit a Spark-only pair)
+        # this filter the shingle kernel would give them a whole-token-list
+        # shingle and two near-identical 2-token docs would emit a
+        # Spark-only pair)
         F.size(F.regexp_extract_all(F.col("text"), F.lit(_TOK), 0))
         >= cfg.shingle_k
     ).select(
@@ -180,19 +181,10 @@ def q_minhash_lsh_pairs(spark, sf_dir) -> DataFrame:
     # ONE fused Arrow pass computes shingles AND the MinHash signature
     # (guide §4: one boundary crossing, not two); the lazy localCheckpoint
     # shares the table between the band path and the Jaccard verify
-    from microdeduplication_spark.functions.hashing import (
-        make_shingles_sigs_udf,
-    )
+    from microdeduplication_spark.functions.hashing import shingles_sigs
 
-    fused = make_shingles_sigs_udf(
-        cfg.shingle_k, cfg.num_perms, cfg.seed, None
-    )
-    shingled = d.select(
-        "file_id", fused(F.col("content_norm")).alias("_s")
-    ).select(
-        "file_id",
-        F.col("_s.shingles").alias("shingles"),
-        F.col("_s.sig").alias("sig"),
+    shingled = shingles_sigs(
+        d, cfg, ["file_id"], minhash=True, simhash=False
     ).localCheckpoint(eager=False)
     sigs = shingled.select("file_id", "sig")
     cands = minhash_lsh.candidate_pairs(minhash_lsh.lsh_bands(sigs, cfg), cfg)
@@ -403,14 +395,10 @@ def q_simhash_hamming_pairs(spark, sf_dir) -> DataFrame:
     )
     # fused single-pass kernel, shingle column never emitted: this query
     # needs only the 64-bit signature, so no wide array crosses Arrow
-    from microdeduplication_spark.functions.hashing import (
-        make_shingles_sigs_udf,
-    )
+    from microdeduplication_spark.functions.hashing import shingles_sigs
 
-    fused = make_shingles_sigs_udf(
-        cfg.shingle_k, None, cfg.seed, cfg.simhash_bits, emit_shingles=False
-    )
-    sims = d.select("file_id", fused(F.col("content_norm"))["sim"].alias("sim"))
+    sims = shingles_sigs(d, cfg, ["file_id"], minhash=False,
+                         emit_shingles=False)
     return sh.candidate_pairs(sims, cfg).select("a_id", "b_id")
 
 

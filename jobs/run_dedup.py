@@ -75,7 +75,6 @@ def main(argv=None) -> int:
         cfg,
         checkpoint_dir=args.checkpoint_dir,
         passes=tuple(args.passes.split(",")),
-        eager_metrics="count" if args.checkpoint_dir is None else False,
     )
     res.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
     res.verified.write.mode("overwrite").parquet(f"{args.output}/verified")

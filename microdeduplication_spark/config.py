@@ -58,9 +58,6 @@ class DedupConfig:
     # buckets larger than this are dropped entirely (degenerate bands --
     # near-empty shingle sets); the count is reported in stage metrics.
     bucket_drop: int = 20000
-    # max candidate pairs verified per file pair source before sampling kicks
-    # in (guard against adversarial all-same corpora); 0 = unlimited.
-    max_pairs_per_bucket: int = 0
 
     # --- determinism ------------------------------------------------------
     seed: int = 42

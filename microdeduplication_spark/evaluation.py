@@ -11,8 +11,6 @@ reaches the driver.
                   This is the BASELINE.json gate: dup-pair recall >= 0.99.
 - pair precision: via certified non-pairs (fixtures.truth_nonpairs): fraction
                   of adversarial below-threshold pairs NOT merged.
-- set/bag counts: distributed equivalents of the reference's set-intersection
-                  (A3) and multiset-match (A4) operators (SURVEY.md §2.5).
 """
 
 from __future__ import annotations
@@ -113,40 +111,3 @@ def nonpair_precision(clusters: DataFrame, truth_nonpairs: DataFrame) -> dict:
     )
     n = row["n"] or 0
     return {"precision": (row["ok"] / n) if n else 1.0, "kept_apart": row["ok"], "total": n}
-
-
-def set_metrics(gold: DataFrame, out: DataFrame, key: str) -> dict:
-    """Reference A3 semantics (set intersection) as distributed ops:
-    |gold ∩ out| via inner join of distincts; precision/recall/F over sets."""
-    g = gold.select(key).distinct()
-    o = out.select(key).distinct()
-    inter = g.join(o, key, "inner").count()
-    n_g, n_o = g.count(), o.count()
-    prec = inter / n_o if n_o else 0.0
-    rec = inter / n_g if n_g else 0.0
-    f = 2 * prec * rec / (prec + rec) if (prec + rec) else 0.0
-    return {"tp": inter, "gold": n_g, "out": n_o,
-            "precision": prec, "recall": rec, "f1": f}
-
-
-def bag_metrics(gold: DataFrame, out: DataFrame, key: str) -> dict:
-    """Reference A4 semantics (multiset match with duplicates counted,
-    EvaluateDeduplication.java:109-127): TP = sum over keys of
-    min(count_gold, count_out) -- full-outer join of per-key counts."""
-    g = gold.groupBy(key).agg(F.count("*").alias("n_g"))
-    o = out.groupBy(key).agg(F.count("*").alias("n_o"))
-    j = g.join(o, key, "full_outer").select(
-        F.coalesce("n_g", F.lit(0)).alias("n_g"),
-        F.coalesce("n_o", F.lit(0)).alias("n_o"),
-    )
-    row = j.agg(
-        F.sum(F.least("n_g", "n_o")).alias("tp"),
-        F.sum("n_g").alias("total_g"),
-        F.sum("n_o").alias("total_o"),
-    ).collect()[0]
-    tp, tg, to = row["tp"] or 0, row["total_g"] or 0, row["total_o"] or 0
-    prec = tp / to if to else 0.0
-    rec = tp / tg if tg else 0.0
-    f = 2 * prec * rec / (prec + rec) if (prec + rec) else 0.0
-    return {"tp": tp, "gold": tg, "out": to,
-            "precision": prec, "recall": rec, "f1": f}

@@ -1,7 +1,11 @@
-"""MinHash + SimHash signatures as vectorized Arrow pandas_udfs.
+"""Shingles + MinHash + SimHash signatures in one vectorized Arrow pass.
 
-The only Python in the pipeline's hot path (BASELINE.json input_hint allows
-exactly this: "vectorized pandas/Arrow UDFs, no per-row Python"). Everything
+make_shingles_sigs_udf (wrapped for DataFrames by shingles_sigs) is the one
+Python entry that computes shingles and both signature families; the
+*_batch functions are its numpy kernels and the reference the tests compare
+against. The only Python in the pipeline's hot path (BASELINE.json
+input_hint allows exactly this: "vectorized pandas/Arrow UDFs, no per-row
+Python"). Everything
 is flat numpy over the concatenation of a whole Arrow batch's shingle arrays
 -- no per-row Python loops -- using np.minimum.reduceat / np.add.reduceat for
 the per-row reductions.
@@ -22,8 +26,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from microdeduplication_spark.config import DedupConfig
 
 U64 = np.uint64
 _EMPTY_SENTINEL = np.iinfo(np.int64).max  # sig rows for empty shingle sets
@@ -241,16 +248,6 @@ def shingles_batch(contents: pd.Series, k: int,
     return pd.Series(out)
 
 
-def make_shingles_udf(k: int):
-    """pandas_udf: content_norm string -> array<long> shingle hashes."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def shingles_udf(content_norm: pd.Series) -> pd.Series:
-        return shingles_batch(content_norm, k)
-
-    return shingles_udf
-
-
 def ngram_hash_batch(texts: pd.Series, n: int) -> pd.Series:
     """Raw text -> sorted distinct int64 token n-gram hashes per row:
     shingles_batch WITHOUT the short-doc whole-list fallback (one shared
@@ -367,22 +364,21 @@ def make_shingles_sigs_udf(k: int, num_perms: int | None, seed: int,
     return fused_udf
 
 
-def make_minhash_udf(num_perms: int, seed: int):
-    """pandas_udf: array<long> shingles -> array<long> signature (len num_perms)."""
-    masks = perm_masks(num_perms, seed)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_udf(shingles: pd.Series) -> pd.Series:
-        return minhash_batch(shingles, masks)
-
-    return minhash_udf
-
-
-def make_simhash_udf(bits: int = 64):
-    """pandas_udf: array<long> shingles -> long (64-bit SimHash)."""
-
-    @F.pandas_udf(T.LongType())
-    def simhash_udf(shingles: pd.Series) -> pd.Series:
-        return simhash_batch(shingles, bits)
-
-    return simhash_udf
+def shingles_sigs(df: DataFrame, cfg: DedupConfig, keep: list[str],
+                  minhash: bool = True, simhash: bool = True,
+                  emit_shingles: bool = True) -> DataFrame:
+    """df(*keep, content_norm) -> (*keep, [shingles], [sig], [sim]) through
+    ONE make_shingles_sigs_udf call: every caller that needs shingles or
+    signatures crosses the Arrow boundary once, with the same kernels."""
+    fused = make_shingles_sigs_udf(
+        cfg.shingle_k,
+        cfg.num_perms if minhash else None,
+        cfg.seed,
+        cfg.simhash_bits if simhash else None,
+        emit_shingles,
+    )
+    out = [name for name, on in (("shingles", emit_shingles),
+                                 ("sig", minhash), ("sim", simhash)) if on]
+    return df.select(
+        *keep, fused(F.col("content_norm")).alias("_s")
+    ).select(*keep, *[F.col(f"_s.{c}").alias(c) for c in out])

@@ -118,6 +118,8 @@ def connected_components(
     Edge sets up to `driver_threshold` take the driver fast path
     (_driver_components); larger graphs run the distributed large-star/
     small-star loop. Set driver_threshold=0 to force the distributed path.
+    The loop raises RuntimeError if it reaches `max_iter` rounds without
+    a fixpoint.
     """
     # LAZY checkpoint: whichever action runs first materializes the blocks
     # in the same job that computes the edge lineage -- an eager checkpoint
@@ -145,6 +147,11 @@ def connected_components(
         if fp == prev_fp:
             break
         prev_fp = fp
+    else:
+        # an unconverged state is a partial assignment: fail loudly
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
     # converged state: small-star output is (node -> component min) stars
     assign = cur.select(
         F.col("src").alias("file_id"), F.col("dst").alias("cluster_id")

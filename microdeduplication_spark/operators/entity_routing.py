@@ -99,17 +99,6 @@ def _branches(l: Column) -> list[tuple[str, Column, bool]]:
     ]
 
 
-def _effective(l: Column) -> dict[str, tuple[Column, bool]]:
-    """else-if semantics: branch i fires only if no earlier branch matched."""
-    out: dict[str, tuple[Column, bool]] = {}
-    seen: Column | None = None
-    for field, cond, first in _branches(l):
-        eff = cond if seen is None else (cond & ~seen)
-        out[field] = (eff, first)
-        seen = cond if seen is None else (seen | cond)
-    return out
-
-
 def route_quad_blocks(
     blocks: DataFrame,
     block_col: str = "block",

@@ -67,6 +67,10 @@ from microdeduplication_spark.operators import (
     simhash as simhash_op,
     substring,
 )
+from microdeduplication_spark.functions.hashing import (
+    make_window_fp_udf,
+    shingles_sigs,
+)
 from microdeduplication_spark.operators.minhash_lsh import banded_self_join
 from microdeduplication_spark.operators.verify import verify_jaccard
 
@@ -102,73 +106,39 @@ def _check_manifest(index_dir: str, cfg: DedupConfig,
         )
 
 
+def _substring_features(lined: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(file_id, fps, line_set): winnowed window fingerprints of the line
+    hashes, kept next to the line set the containment verify reads."""
+    fp = make_window_fp_udf(cfg.substr_window, cfg.substr_winnow)
+    return lined.select("file_id", fp(F.col("lines")).alias("fps"), "line_set")
+
+
 def _rep_features(reps: DataFrame, cfg: DedupConfig,
                   passes: tuple[str, ...]) -> DataFrame:
     """(file_id, shingles, [sig], [sim], [fps, line_set]) for distinct reps.
 
-    One shingle scan feeds every signature family (same economy as the
-    pipeline's fused signature stage, pipeline.py:276-293)."""
-    shingled = minhash_lsh.add_shingles(reps, cfg).localCheckpoint(eager=False)
-    cols = [F.col("file_id"), F.col("shingles")]
-    if "minhash" in passes:
-        from microdeduplication_spark.functions.hashing import make_minhash_udf
-
-        cols.append(make_minhash_udf(cfg.num_perms, cfg.seed)(
-            F.col("shingles")).alias("sig"))
-    if "simhash" in passes:
-        from microdeduplication_spark.functions.hashing import make_simhash_udf
-
-        cols.append(make_simhash_udf(cfg.simhash_bits)(
-            F.col("shingles")).alias("sim"))
-    feats = shingled.select(*cols)
+    Shingles and every signature family come from ONE Arrow pass (the
+    pipeline's shingles stage runs the same shingles_sigs call)."""
+    feats = shingles_sigs(reps, cfg, ["file_id"], minhash="minhash" in passes,
+                          simhash="simhash" in passes)
     if "substring" in passes:
-        from microdeduplication_spark.functions.hashing import (
-            make_window_fp_udf,
-        )
-
-        lined = substring.line_hash_sets(reps)
-        fp = make_window_fp_udf(cfg.substr_window, cfg.substr_winnow)
-        sub = lined.select(
-            "file_id", fp(F.col("lines")).alias("fps"), "line_set"
-        )
-        feats = feats.join(sub, "file_id")
+        feats = feats.join(
+            _substring_features(substring.line_hash_sets(reps), cfg),
+            "file_id")
     return feats
 
 
 def _features_from_result(res, cfg: DedupConfig,
                           passes: tuple[str, ...]) -> DataFrame:
-    """Index rep features PROJECTED from the pipeline's own persisted
-    stages (shingled/signatures/lined) instead of re-running the Arrow
-    kernels over the whole corpus -- init_index previously paid the
-    dominant signature stage twice. Only the substring window fingerprints
-    are recomputed (from the persisted line hashes, skipping the line-hash
-    kernel). Falls back to _rep_features when a stage is missing."""
-    st = res.stages
-    if "shingled" not in st or (
-        ("minhash" in passes or "simhash" in passes)
-        and "signatures" not in st
-    ) or ("substring" in passes and "lined" not in st):
-        groups = exact_dedup.exact_groups(res.normalized)
-        reps = exact_dedup.representatives(res.normalized, groups)
-        return _rep_features(reps, cfg, passes)
-    feats = st["shingled"].select("file_id", "shingles")
-    if "minhash" in passes or "simhash" in passes:
-        sig_cols = ["file_id"]
-        if "minhash" in passes:
-            sig_cols.append("sig")
-        if "simhash" in passes:
-            sig_cols.append("sim")
-        feats = feats.join(st["signatures"].select(*sig_cols), "file_id")
+    """Index rep features PROJECTED from the pipeline's own materialized
+    stages (shingled carries the fused sig/sim columns; lined) instead of
+    re-running the Arrow kernels over the whole corpus. Only the substring
+    window fingerprints are recomputed (from the materialized line hashes,
+    skipping the line-hash kernel). Same columns as _rep_features."""
+    feats = res.stages["shingled"].drop("lang")
     if "substring" in passes:
-        from microdeduplication_spark.functions.hashing import (
-            make_window_fp_udf,
-        )
-
-        fp = make_window_fp_udf(cfg.substr_window, cfg.substr_winnow)
-        sub = st["lined"].select(
-            "file_id", fp(F.col("lines")).alias("fps"), "line_set"
-        )
-        feats = feats.join(sub, "file_id")
+        feats = feats.join(
+            _substring_features(res.stages["lined"], cfg), "file_id")
     return feats
 
 

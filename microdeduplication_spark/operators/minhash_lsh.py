@@ -34,44 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from microdeduplication_spark.config import DedupConfig
-from microdeduplication_spark.functions.hashing import make_minhash_udf
-from microdeduplication_spark.functions.text import shingle_hashes, tokens
-
-
-def add_shingles(
-    reps: DataFrame, cfg: DedupConfig, engine: str = "arrow"
-) -> DataFrame:
-    """(file_id, lang, content_norm) -> + shingles array<long> (distinct, sorted).
-
-    engine="arrow" (default): vectorized pandas_udf -- C-speed tokenization +
-    numpy polynomial window combine with per-batch token-hash memoization
-    (~20x the throughput of the interpreted-HOF path; higher-order Catalyst
-    lambdas are evaluated interpreted, ~22ms per 8KB file measured).
-    engine="jvm": pure Catalyst higher-order functions (no Python anywhere);
-    same set semantics, different 64-bit hash values (irrelevant to Jaccard).
-    """
-    if engine == "arrow":
-        from microdeduplication_spark.functions.hashing import make_shingles_udf
-
-        sh = make_shingles_udf(cfg.shingle_k)
-        return reps.select(
-            "file_id", "lang", sh(F.col("content_norm")).alias("shingles")
-        )
-    # two-step select: tokens materialize as a real column before the shingle
-    # transform references them (see shingle_hashes' performance contract)
-    return reps.select(
-        "file_id", "lang", tokens(F.col("content_norm")).alias("toks")
-    ).select(
-        "file_id",
-        "lang",
-        shingle_hashes(F.col("toks"), cfg.shingle_k).alias("shingles"),
-    )
-
-
-def minhash_signatures(shingled: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """+ sig array<long>[num_perms] via the vectorized Arrow pandas_udf."""
-    mh = make_minhash_udf(cfg.num_perms, cfg.seed)
-    return shingled.select("file_id", mh(F.col("shingles")).alias("sig"))
 
 
 def lsh_bands(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:

@@ -32,14 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from microdeduplication_spark.config import DedupConfig
-from microdeduplication_spark.functions.hashing import make_simhash_udf
 from microdeduplication_spark.operators.minhash_lsh import banded_self_join
-
-
-def simhash_signatures(shingled: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(file_id, shingles) -> (file_id, sim) 64-bit signature."""
-    sh = make_simhash_udf(cfg.simhash_bits)
-    return shingled.select("file_id", sh(F.col("shingles")).alias("sim"))
 
 
 def simhash_bands(sims: DataFrame, cfg: DedupConfig) -> DataFrame:

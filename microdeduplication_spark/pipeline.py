@@ -3,21 +3,33 @@
 Stage graph (SURVEY.md §3 "new-engine lifecycle"):
 
     ingest_normalize -> exact_dedup(norm_sha)
+        -> shingles (ONE Arrow pass: shingles + MinHash sig + SimHash sim)
         -> [minhash_lsh | simhash | substring]   (on exact representatives)
         -> candidate_union -> verify (jaccard / containment)
         -> (+ exact star edges) -> connected_components -> clusters
 
 Each stage is a pure DataFrame->DataFrame function (operators/*); this module
-only composes them, persists per-stage checkpoint tables, and records the
-lineage manifest (north_rule: "resumable from checkpoint with per-partition
-lineage + metrics").
+only composes them, materializes each stage, and records the lineage
+manifest (north_rule: "resumable from checkpoint with per-partition lineage
++ metrics"). Signatures come from functions/hashing.shingles_sigs, the one
+Python entry for shingles, MinHash and SimHash; the candidate stages read
+the signatures as projections of the shingles stage.
 
-Checkpoint contract: stage outputs land at <dir>/<stage>/ as parquet with a
-sibling <dir>/<stage>.manifest.json carrying {stage, config, input_stages,
-rows, partitions, wall_ms}. On rerun, a stage whose manifest matches the
-current config hash is read back instead of recomputed; deleting any stage
-directory invalidates it and everything downstream recomputes from the last
-valid prefix -- tested by test_pipeline.py::test_resume_idempotent.
+Stage materialization has two policies behind one call, _Checkpointer.run:
+
+- in memory (checkpoint_dir=None): every stage is persisted and counted on
+  a thread pool as soon as its input stages have materialized, so
+  independent stages run as concurrent Spark jobs;
+- parquet (checkpoint_dir set): stage outputs land at <dir>/<stage>/ with a
+  sibling <dir>/<stage>.manifest.json carrying {stage, config, input_stages,
+  rows, partitions, wall_ms}. On rerun, a stage whose manifest matches the
+  current config hash and upstream build ids is read back instead of
+  recomputed; deleting any stage directory invalidates it and everything
+  downstream recomputes from the last valid prefix -- tested by
+  test_pipeline.py::test_resume_idempotent.
+
+Intermediates with several consumers (exact groups, representatives, line
+hashes) are persisted under both policies.
 """
 
 from __future__ import annotations
@@ -42,6 +54,7 @@ from microdeduplication_spark.operators import (
     substring,
     verify,
 )
+from microdeduplication_spark.functions.hashing import shingles_sigs
 
 ALL_PASSES = ("minhash", "simhash", "substring")
 
@@ -56,21 +69,20 @@ class PipelineResult:
     # intermediate stage handles (persisted/checkpointed) so downstream
     # consumers (incremental_dedup.init_index) can PROJECT per-rep features
     # instead of re-running the Arrow kernels over the whole corpus:
-    # "shingled" (file_id, lang, shingles), "signatures" (file_id,[sig],[sim]),
-    # "lined" (substring pass input). Keys absent when the pass didn't run.
+    # "shingled" (file_id, lang, shingles, [sig], [sim]) and, when the
+    # substring pass runs, "lined" (its input).
     stages: dict = field(default_factory=dict)
 
 
 class _Checkpointer:
-    """Per-stage parquet checkpoints with config-hashed manifests."""
+    """Stage materialization: in memory (persist + async count) when root
+    is None, else per-stage parquet checkpoints with config-hashed
+    manifests."""
 
     def __init__(self, spark: SparkSession, root: str | None, cfg: DedupConfig,
-                 eager: bool | str = False, extra_key: tuple = ()):
+                 extra_key: tuple = ()):
         self.spark = spark
         self.root = root
-        # in-memory stage handling: False = fully lazy, "persist" / True =
-        # persist each stage (no extra action), "count" = persist+count+time
-        self.eager = eager
         # stable across processes (Python's builtin str hash is seeded per run).
         # extra_key folds run-shape parameters that are not part of DedupConfig
         # (e.g. the active `passes` tuple) into the hash, so rerunning with a
@@ -85,7 +97,9 @@ class _Checkpointer:
         # record the exact build_ids they consumed, so rebuilding any upstream
         # stage (new build_id) invalidates the whole downstream suffix.
         self.build_ids: dict[str, str] = {}
-        # count-mode async materialization: stage -> Future (see _submit)
+        # stages read back from a matching parquet checkpoint in this run
+        self.reloaded: set[str] = set()
+        # in-memory async materialization: stage -> Future (see _submit)
         self._futures: dict = {}
         self._executor = None
 
@@ -99,30 +113,17 @@ class _Checkpointer:
         """Build (or reload) one stage; record lineage metrics either way."""
         t0 = time.monotonic()
         if self.root is None:
-            df = build()
-            if self.eager == "count":
-                # throughput/profiling mode: persist now, materialize
-                # asynchronously once the stage's INPUT stages finish --
-                # the whole stage DAG runs as concurrent Spark jobs with
-                # dependency-aware ordering, so forced materialization no
-                # longer serializes anything (Spark's per-block cache locks
-                # make even an early touch of shared lineage compute each
-                # partition exactly once)
-                df = df.persist()
-                self._submit(stage, df, input_stages)
-            elif self.eager:
-                # throughput mode: persist so shared lineage computes once,
-                # but add no extra action -- the first consumer materializes
-                df = df.persist()
-                self.metrics.append(
-                    {"stage": stage, "cached": False, "wall_ms": None,
-                     "inputs": input_stages}
-                )
-            else:
-                self.metrics.append(
-                    {"stage": stage, "cached": False, "wall_ms": None,
-                     "inputs": input_stages}
-                )
+            # persist now, materialize asynchronously once the stage's
+            # INPUT stages finish -- the whole stage DAG runs as concurrent
+            # Spark jobs with dependency-aware ordering, so forced
+            # materialization serializes nothing (Spark's per-block cache
+            # locks make even an early touch of shared lineage compute each
+            # partition exactly once). Persist without forced
+            # materialization measured slower: branches of one wide job
+            # race to fill the cache and recompute shared lineage (139 s vs
+            # 87 s at 8 cores, 20k files)
+            df = build().persist()
+            self._submit(stage, df, input_stages)
             return df
         data_dir, man_path = self._paths(stage)
         expected_inputs = {s: self.build_ids.get(s) for s in input_stages}
@@ -134,6 +135,7 @@ class _Checkpointer:
                 and man.get("input_ids") == expected_inputs
             ):
                 self.build_ids[stage] = man["build_id"]
+                self.reloaded.add(stage)
                 self.metrics.append({**man, "cached": True})
                 return self.spark.read.parquet(data_dir)
             # stale: config changed or an upstream stage was rebuilt
@@ -237,21 +239,24 @@ def run_pipeline(
     cfg: DedupConfig | None = None,
     checkpoint_dir: str | None = None,
     passes: tuple[str, ...] = ALL_PASSES,
-    eager_metrics: bool | str = False,
+    # only "count" remains; the keyword stays because perfbench/run.py passes it
+    eager_metrics: str = "count",
 ) -> PipelineResult:
     """files(repo,path,commit,lang,content) -> PipelineResult.
 
-    checkpoint_dir=None runs fully lazy/in-memory (tests); a path makes every
-    stage an idempotent parquet checkpoint (resumable, north_rule).
-    eager_metrics materializes + times every in-memory stage (profiling).
+    checkpoint_dir=None materializes every stage in memory (persist + async
+    count); a path makes every stage an idempotent parquet checkpoint
+    (resumable, north_rule).
     """
+    if eager_metrics != "count":
+        raise ValueError(f"eager_metrics must be 'count', got {eager_metrics!r}")
     cfg = cfg or DedupConfig()
-    # "layout-v2": the shingles stage now carries the fused sig/sim columns;
-    # folding a layout token into the config hash refuses checkpoint dirs
-    # written by the previous layout (clean rebuild) instead of reloading a
-    # shingles table the signatures projection cannot be built from
-    ck = _Checkpointer(spark, checkpoint_dir, cfg, eager=eager_metrics,
-                       extra_key=tuple(passes) + ("stage-layout-v2",))
+    # the layout token folded into the config hash refuses checkpoint dirs
+    # written by an earlier stage layout (clean rebuild) instead of
+    # misreading them; v3: no parquet "signatures" stage, the candidate
+    # stages project sig/sim from "shingles"
+    ck = _Checkpointer(spark, checkpoint_dir, cfg,
+                       extra_key=tuple(passes) + ("stage-layout-v3",))
 
     if not any(p in passes for p in ALL_PASSES):
         raise ValueError("at least one pass required")
@@ -260,99 +265,43 @@ def run_pipeline(
     normalized = ck.run(
         "normalized", lambda: exact_dedup.ingest_normalize(files, cfg), []
     )
-    if checkpoint_dir is None:
-        normalized = normalized.persist()
 
     # ---- level 1: exact edges + shingles (independent) -------------------
-    groups = exact_dedup.exact_groups(normalized)
-    if checkpoint_dir is None:
-        # three consumers (exact_edges, representatives x2 via shingles and
-        # lined): persist the tiny (norm_sha, rep_id, group_size) table so
-        # each consumer's job reuses the agg instead of re-reading the full
-        # normalized cache and re-running the hash aggregate
-        groups = groups.persist()
+    # three consumers (exact_edges, representatives x2 via shingles and
+    # lined): persist the tiny (norm_sha, rep_id, group_size) table so each
+    # consumer's job reuses the agg instead of re-reading normalized and
+    # re-running the hash aggregate
+    groups = exact_dedup.exact_groups(normalized).persist()
     ex_edges = ck.run(
         "exact_edges",
         lambda: exact_dedup.exact_edges(normalized, groups),
         ["normalized"],
     )
-    reps = exact_dedup.representatives(normalized, groups)
-    if checkpoint_dir is None:
-        # two consumers (shingles, lined): persist so the normalized-cache
-        # scan + rep semi-join computes once instead of per consumer
-        reps = reps.persist()
+    # two consumers (shingles, lined): persist so the normalized scan + rep
+    # semi-join computes once instead of per consumer
+    reps = exact_dedup.representatives(normalized, groups).persist()
 
     need_mh = "minhash" in passes
     need_sh = "simhash" in passes
 
-    def _build_shingled() -> DataFrame:
-        if not (need_mh or need_sh):
-            return minhash_lsh.add_shingles(reps, cfg)
-        # fused kernel: the shingle arrays are born in numpy inside ONE
-        # Arrow UDF that also computes both signature families, so the
-        # wide shingle column never round-trips JVM->Python->JVM->Python
-        # between a shingle stage and a signature stage (guide §4: control
-        # how many bytes cross the boundary)
-        from microdeduplication_spark.functions.hashing import (
-            make_shingles_sigs_udf,
-        )
+    # fused kernel: the shingle arrays are born in numpy inside ONE Arrow
+    # UDF that also computes the active signature families, so the wide
+    # shingle column never round-trips JVM->Python->JVM->Python between a
+    # shingle stage and a signature stage (guide §4: control how many bytes
+    # cross the boundary)
+    shingled = ck.run(
+        "shingles",
+        lambda: shingles_sigs(reps, cfg, ["file_id", "lang"],
+                              minhash=need_mh, simhash=need_sh),
+        ["normalized"],
+    )
 
-        fused = make_shingles_sigs_udf(
-            cfg.shingle_k,
-            cfg.num_perms if need_mh else None,
-            cfg.seed,
-            cfg.simhash_bits if need_sh else None,
-        )
-        cols = ["file_id", "lang", F.col("_s.shingles").alias("shingles")]
-        if need_mh:
-            cols.append(F.col("_s.sig").alias("sig"))
-        if need_sh:
-            cols.append(F.col("_s.sim").alias("sim"))
-        return reps.select(
-            "file_id", "lang", fused(F.col("content_norm")).alias("_s")
-        ).select(*cols)
-
-    shingled = ck.run("shingles", _build_shingled, ["normalized"])
-    if checkpoint_dir is None:
-        shingled = shingled.persist()
-
-    # ---- level 2: signatures (a projection of the fused shingle table;
-    #               kept as a stage so checkpoints/metrics/consumers keep
-    #               their layout) + substring fingerprints ----------------
+    # ---- level 2: substring fingerprints --------------------------------
     cand_parts: list[DataFrame] = []
     cand_stage_names: list[str] = []
-    sigs = None
-    sig_dep = ["signatures"]
-    if need_mh or need_sh:
-
-        def _build_signatures() -> DataFrame:
-            cols = [F.col("file_id")]
-            if need_mh:
-                cols.append(F.col("sig"))
-            if need_sh:
-                cols.append(F.col("sim"))
-            return shingled.select(*cols)
-
-        if checkpoint_dir is None:
-            # pure projection of the PERSISTED fused shingle table: a
-            # second cache copy + its count job bought nothing in-memory
-            # (the consumers slice the parent cache just as fast), and in
-            # the concurrent count-mode wave the extra job contended with
-            # the candidate stages. Checkpoint mode keeps the real stage
-            # (its parquet table is the resume point test_resume pins).
-            sigs = _build_signatures()
-            ck.metrics.append(
-                {"stage": "signatures", "cached": False, "wall_ms": None,
-                 "inputs": ["shingles"], "projection": True}
-            )
-            sig_dep = ["shingles"]
-        else:
-            sigs = ck.run("signatures", _build_signatures, ["shingles"])
     lined = None
     if "substring" in passes:
-        lined = substring.line_hash_sets(reps)
-        if checkpoint_dir is None:
-            lined = lined.persist()
+        lined = substring.line_hash_sets(reps).persist()
         cand_parts.append(
             ck.run(
                 "cand_substring",
@@ -362,60 +311,47 @@ def run_pipeline(
         )
         cand_stage_names.append("cand_substring")
 
-    # ---- level 3: candidate joins (independent given signatures) ---------
-    bands = None
-    if "minhash" in passes:
-        bands = minhash_lsh.lsh_bands(sigs.select("file_id", "sig"), cfg)
-        if eager_metrics == "count" or checkpoint_dir is not None:
-            # the band table has TWO consumers on these paths (the banded
-            # join and hot_bucket_stats); a lazy localCheckpoint computes
-            # the explode + per-band xxhash once instead of per consumer
-            # (narrow (file_id, band_idx, band_hash) rows, ~24 B each).
-            # The stats-free lazy path keeps the single-consumer stream.
-            bands = bands.localCheckpoint(eager=False)
+    # ---- level 3: candidate joins (signatures are projections of the
+    #               materialized shingles stage) ---------------------------
+    if need_mh:
+        # the band table has TWO consumers (the banded join and
+        # hot_bucket_stats); a lazy localCheckpoint computes the explode +
+        # per-band xxhash once instead of per consumer (narrow
+        # (file_id, band_idx, band_hash) rows, ~24 B each)
+        bands = minhash_lsh.lsh_bands(shingled.select("file_id", "sig"), cfg) \
+            .localCheckpoint(eager=False)
         cand_parts.append(
             ck.run(
                 "cand_minhash",
                 lambda: minhash_lsh.candidate_pairs(bands, cfg),
-                sig_dep,
+                ["shingles"],
             )
         )
         cand_stage_names.append("cand_minhash")
-        if eager_metrics == "count":
+        if "cand_minhash" not in ck.reloaded:
             # star-pairing elision + dropped degenerate buckets: the
             # hot-bucket path changes pair-level semantics, so the extent
             # must be a reported metric, never silent. The tiny stats job
-            # rides the level-3 thread pool, overlapping cand_minhash.
+            # rides the thread pool, overlapping the later stages. A
+            # reloaded cand_minhash elided nothing in this run; the run
+            # that built it reported its skew.
             ck.defer_stats(
                 "cand_minhash_skew",
                 minhash_lsh.hot_bucket_stats(bands, cfg),
                 input_stages=["cand_minhash"],
             )
-    if "simhash" in passes:
+    if need_sh:
         cand_parts.append(
             ck.run(
                 "cand_simhash",
                 lambda: simhash_op.candidate_pairs(
-                    sigs.select("file_id", "sim"), cfg
+                    shingled.select("file_id", "sim"), cfg
                 ),
-                sig_dep,
+                ["shingles"],
             )
         )
         cand_stage_names.append("cand_simhash")
 
-    if bands is not None and checkpoint_dir is not None:
-        built = any(
-            m.get("stage") == "cand_minhash" and not m.get("cached")
-            for m in ck.metrics
-        )
-        if built:
-            # checkpoint-mode skew report (skipped when cand_minhash
-            # reloaded: nothing was elided in this run; the original run's
-            # manifest already reported it)
-            skew = minhash_lsh.hot_bucket_stats(bands, cfg).first().asDict()
-            ck.metrics.append(
-                {"stage": "cand_minhash_skew", "cached": False, **skew}
-            )
     candidates = cand_parts[0]
     for p in cand_parts[1:]:
         candidates = candidates.unionByName(p)
@@ -468,11 +404,7 @@ def run_pipeline(
         metrics=ck.metrics,
         stages={
             k: v
-            for k, v in (
-                ("shingled", shingled),
-                ("signatures", sigs),
-                ("lined", lined),
-            )
+            for k, v in (("shingled", shingled), ("lined", lined))
             if v is not None
         },
     )

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd  # module-level: the prewarm UDF's type hints resolve here
 from pyspark.sql import SparkSession
 
 
@@ -134,9 +133,11 @@ def build_session(
         # SPARK_GRAFT_PREWARM=0.
         from pyspark.sql import functions as F
 
-        def _identity(s: pd.Series) -> pd.Series:
+        def _identity(s):
             return s
 
+        # untyped on purpose: a pandas_udf without type hints is a scalar
+        # pandas UDF, so importing this module never needs pandas
         warm = F.pandas_udf(_identity, "long")
         (spark.range(cores, numPartitions=int(cores))
              .select(warm("id").alias("id"))

@@ -59,20 +59,6 @@ def read_files(
     return df
 
 
-def write_stage(df: DataFrame, table: str | None, parquet_path: str | None) -> None:
-    """Stage sink: Iceberg append in production, parquet locally.
-
-    Mirrors the reference's saveAsTextFile sinks (Application.java:111,
-    Deduplication.java:132) as idempotent overwrite-by-run tables.
-    """
-    if table is not None:
-        df.writeTo(table).createOrReplace()
-    elif parquet_path is not None:
-        df.write.mode("overwrite").parquet(parquet_path)
-    else:
-        raise ValueError("need table or parquet_path")
-
-
 def url_key(url, date):
     """The reference's document id (IgnoreFunction.java:94-103):
     `protocol::host::path::query::yyyyMMddHHmmss`, query literally "null"

@@ -3,23 +3,15 @@
 The reference counts N-quad records per RDF type with reduceByKey + a
 sort-descending swap trick and coalesce(1) output
 (/root/reference/deduplicaiton/.../processes/RDFStatistics.java:38-128).
-Here each statistic is one declarative aggregation; the swap-sort becomes
-orderBy(desc), and coalesce(1) survives only for tiny metric tables.
+Here each statistic is one declarative aggregation (the per-type count with
+its swap-sort is sources/text_source.type_statistics), and coalesce(1)
+survives only for tiny metric tables.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def counts_by(df: DataFrame, col: str) -> DataFrame:
-    """Count per value, descending -- SURVEY.md A1 + W3 (type statistics)."""
-    return (
-        df.groupBy(col)
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.col("n").desc(), F.col(col))
-    )
 
 
 def cluster_size_histogram(clusters: DataFrame) -> DataFrame:

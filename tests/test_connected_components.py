@@ -90,3 +90,20 @@ def test_large_random_graph_both_paths_agree(spark):
         if a != b
     ]
     _check(spark, edges)
+
+
+def test_round_cap_raises_instead_of_partial_assignment(spark):
+    """The distributed loop must fail loudly at its round cap: one round
+    cannot reach a fixpoint on a 20-node chain, so max_iter=1 raises and
+    names the cap; the default cap converges to the oracle."""
+    import pytest
+
+    edges = [(i, i + 1) for i in range(1, 20)]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    with pytest.raises(RuntimeError, match="1 rounds"):
+        connected_components(df, max_iter=1, driver_threshold=0)
+    got = {
+        r["file_id"]: r["cluster_id"]
+        for r in connected_components(df, driver_threshold=0).collect()
+    }
+    assert got == _uf_oracle(edges)

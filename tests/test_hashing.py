@@ -138,34 +138,42 @@ def test_simhash_hamming_tracks_similarity():
 
 
 def test_spark_udfs_agree_with_batch(spark, cfg):
-    """The pandas_udfs (Arrow path) produce the same values as direct numpy."""
-    from pyspark.sql import functions as F
-
+    """The single Arrow kernel (shingles_sigs -> make_shingles_sigs_udf)
+    gives the same shingles, MinHash and SimHash values as the numpy
+    reference shingles_batch -> minhash_batch / simhash_batch, for every
+    family selection the callers use."""
     from microdeduplication_spark.functions.hashing import (
-        make_minhash_udf,
-        make_simhash_udf,
+        shingles_batch,
+        shingles_sigs,
     )
 
     rng = np.random.default_rng(19)
-    rows = [rng.integers(-(1 << 62), 1 << 62, size=30, dtype=np.int64).tolist()
-            for _ in range(25)]
+    vocab = [f"w{i}" for i in range(40)]
+    texts = [" ".join(rng.choice(vocab, size=int(n)))
+             for n in rng.integers(0, 60, size=25)] + ["", "one two"]
     df = spark.createDataFrame(
-        [(i, r) for i, r in enumerate(rows)], ["i", "shingles"]
+        list(enumerate(texts)), "file_id long, content_norm string"
     )
-    mh = make_minhash_udf(cfg.num_perms, cfg.seed)
-    sh = make_simhash_udf()
-    got = {
-        r["i"]: (r["sig"], r["sim"])
-        for r in df.select(
-            "i", mh("shingles").alias("sig"), sh("shingles").alias("sim")
-        ).collect()
-    }
-    masks = perm_masks(cfg.num_perms, cfg.seed)
-    want_sigs = minhash_batch(pd.Series([np.array(r, np.int64) for r in rows]), masks)
-    want_sims = simhash_batch(pd.Series([np.array(r, np.int64) for r in rows]))
-    for i, r in enumerate(rows):
-        assert list(got[i][0]) == list(want_sigs[i])
-        assert got[i][1] == int(want_sims[i])
+    sh = shingles_batch(pd.Series(texts), cfg.shingle_k)
+    want_sigs = minhash_batch(sh, perm_masks(cfg.num_perms, cfg.seed))
+    want_sims = simhash_batch(sh, cfg.simhash_bits)
+
+    got = {r["file_id"]: r for r in shingles_sigs(df, cfg, ["file_id"]).collect()}
+    for i in range(len(texts)):
+        assert list(got[i]["shingles"]) == list(sh[i])
+        assert list(got[i]["sig"]) == list(want_sigs[i])
+        assert got[i]["sim"] == int(want_sims[i])
+
+    only_sh = shingles_sigs(df, cfg, ["file_id"], minhash=False, simhash=False)
+    assert only_sh.columns == ["file_id", "shingles"]
+    for r in only_sh.collect():
+        assert list(r["shingles"]) == list(sh[r["file_id"]])
+
+    only_sim = shingles_sigs(df, cfg, ["file_id"], minhash=False,
+                             emit_shingles=False)
+    assert only_sim.columns == ["file_id", "sim"]
+    for r in only_sim.collect():
+        assert r["sim"] == int(want_sims[r["file_id"]])
 
 
 def test_simhash_block_combo_guarantee(spark):

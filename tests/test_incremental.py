@@ -53,6 +53,31 @@ def test_incremental_equals_one_shot(spark, cfg, corpus, tmp_path):
     assert got == want
 
 
+def test_rep_features_equal_pipeline_projection(spark, cfg, corpus):
+    """The increment path's features (_rep_features: one shingles_sigs
+    pass over the reps) equal the features init_index projects from the
+    pipeline's own stages, row for row, for the same representatives."""
+    from microdeduplication_spark.operators import exact_dedup
+    from microdeduplication_spark.operators.incremental_dedup import (
+        ALL_PASSES,
+        _features_from_result,
+        _rep_features,
+    )
+
+    res = run_pipeline(spark, files_spark_df(spark, corpus), cfg)
+    reps = exact_dedup.representatives(
+        res.normalized, exact_dedup.exact_groups(res.normalized))
+    cols = ["file_id", "shingles", "sig", "sim", "fps"]
+
+    def rows(df):
+        return {r["file_id"]: r for r in df.select(*cols).collect()}
+
+    want = rows(_features_from_result(res, cfg, ALL_PASSES))
+    got = rows(_rep_features(reps, cfg, ALL_PASSES))
+    assert len(want) > 100
+    assert got == want
+
+
 def test_known_content_attaches_without_new_rep(spark, cfg, corpus, tmp_path):
     """A batch file byte-identical to indexed content joins that cluster by
     the sha join alone: no signature computed, no reps row appended."""

@@ -359,8 +359,10 @@ def test_hot_bucket_star_elision_and_exact_mode(spark):
     assert exact_pairs == want
 
 
-def test_pipeline_reports_skew_metrics(spark):
-    """count-mode pipeline metrics include the cand_minhash_skew entry."""
+@pytest.mark.parametrize("mode", ["in_memory", "checkpoint_dir"])
+def test_pipeline_reports_skew_metrics(spark, tmp_path, mode):
+    """Both materialization policies report exactly one cand_minhash_skew
+    entry for a run that builds cand_minhash."""
     from microdeduplication_spark.config import DedupConfig
     from microdeduplication_spark.pipeline import run_pipeline
 
@@ -369,8 +371,9 @@ def test_pipeline_reports_skew_metrics(spark):
     files = spark.createDataFrame(
         rows, "repo string, path string, commit string, lang string, content string"
     )
-    res = run_pipeline(spark, files, DedupConfig(), passes=("minhash",),
-                       eager_metrics="count")
+    ck = str(tmp_path / "ck") if mode == "checkpoint_dir" else None
+    res = run_pipeline(spark, files, DedupConfig(), checkpoint_dir=ck,
+                       passes=("minhash",))
     skew = [m for m in res.metrics if m.get("stage") == "cand_minhash_skew"]
     assert len(skew) == 1
     assert {"hot_buckets", "pairs_elided", "dropped_buckets",

@@ -116,13 +116,21 @@ def test_resume_idempotent(spark, corpus, files_df, cfg, tmp_path_factory):
     # delete a mid-pipeline stage -> it and downstream recompute, same result
     import shutil, os
 
-    shutil.rmtree(os.path.join(ckdir, "signatures"))
-    os.remove(os.path.join(ckdir, "signatures.manifest.json"))
+    shutil.rmtree(os.path.join(ckdir, "shingles"))
+    os.remove(os.path.join(ckdir, "shingles.manifest.json"))
     r3 = run_pipeline(spark, files_df, cfg, checkpoint_dir=ckdir)
     cached = {m["stage"]: m.get("cached") for m in r3.metrics}
     assert cached["normalized"] is True
-    assert cached["signatures"] is False
+    assert cached["shingles"] is False
     assert cached["cand_minhash"] is False
     assert cached["cand_simhash"] is False
     c3 = sorted((r["file_id"], r["cluster_id"]) for r in r3.clusters.collect())
     assert c1 == c3
+
+
+def test_lazy_and_persist_modes_are_gone(spark, files_df, cfg):
+    """In-memory runs have one materialization policy: eager_metrics
+    accepts only "count" and refuses the removed lazy/persist values."""
+    for mode in (False, True, "persist"):
+        with pytest.raises(ValueError):
+            run_pipeline(spark, files_df, cfg, eager_metrics=mode)

@@ -65,6 +65,7 @@ def test_candidate_lineage_has_no_nested_loop(spark, cfg):
     self-join entirely -- pairs expand map-side, pinned by
     test_banded_join_is_map_side_single_exchange -- so the only joins left
     upstream are the exact-dedup equi joins.)"""
+    from microdeduplication_spark.functions.hashing import shingles_sigs
     from microdeduplication_spark.operators import exact_dedup, minhash_lsh
 
     files = spark.createDataFrame(
@@ -74,8 +75,7 @@ def test_candidate_lineage_has_no_nested_loop(spark, cfg):
     norm = exact_dedup.ingest_normalize(files, cfg)
     groups = exact_dedup.exact_groups(norm)
     reps = exact_dedup.representatives(norm, groups)
-    sh = minhash_lsh.add_shingles(reps, cfg)
-    sigs = minhash_lsh.minhash_signatures(sh, cfg)
+    sigs = shingles_sigs(reps, cfg, ["file_id"], simhash=False)
     cands = minhash_lsh.candidate_pairs(minhash_lsh.lsh_bands(sigs, cfg), cfg)
     plan = _plan(cands)
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
@@ -97,13 +97,14 @@ def test_normalize_stays_in_codegen(spark, cfg):
 
 
 def test_minhash_is_arrow_vectorized_not_row_python(spark, cfg):
-    """Signature UDFs must run as Arrow-vectorized eval, never row-Python."""
-    from microdeduplication_spark.functions.hashing import make_minhash_udf
+    """The signature kernel must run as Arrow-vectorized eval, never
+    row-Python, and cross the Arrow boundary ONCE for shingles, MinHash
+    and SimHash together."""
+    from microdeduplication_spark.functions.hashing import shingles_sigs
 
-    df = spark.createDataFrame([(list(range(10)),)], ["shingles"])
-    mh = make_minhash_udf(cfg.num_perms, cfg.seed)
-    plan = _plan(df.select(mh("shingles").alias("sig")))
-    assert "ArrowEvalPython" in plan
+    df = spark.createDataFrame([(1, "a b c d e f g")], ["file_id", "content_norm"])
+    plan = _plan(shingles_sigs(df, cfg, ["file_id"]))
+    assert plan.count("ArrowEvalPython") == 1
     assert "BatchEvalPython" not in plan  # row-at-a-time Python path
 
 

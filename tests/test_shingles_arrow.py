@@ -6,9 +6,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from microdeduplication_spark.functions.hashing import shingles_batch
-from microdeduplication_spark.functions.text import normalize_py, shingles_py
-from microdeduplication_spark.operators.minhash_lsh import add_shingles
+from microdeduplication_spark.functions.hashing import shingles_batch, shingles_sigs
+from microdeduplication_spark.functions.text import (
+    normalize_py,
+    shingle_hashes,
+    shingles_py,
+    tokens,
+)
 
 
 def test_shingles_batch_counts_match_python_mirror(corpus, cfg):
@@ -56,8 +60,16 @@ def test_arrow_and_jvm_engines_agree_on_jaccard(spark, cfg, corpus):
             .collect()
         }
 
-    arrow = pair_jacs(add_shingles(reps, cfg, engine="arrow"))
-    jvm = pair_jacs(add_shingles(reps, cfg, engine="jvm"))
+    arrow = pair_jacs(shingles_sigs(reps, cfg, ["file_id"], minhash=False,
+                                    simhash=False))
+    # JVM reference: pure Catalyst higher-order functions, no Python. Two
+    # selects: the tokens materialize as a real column before the shingle
+    # transform references them (see shingle_hashes' performance contract)
+    jvm = pair_jacs(reps.select(
+        "file_id", tokens(F.col("content_norm")).alias("toks")
+    ).select(
+        "file_id", shingle_hashes(F.col("toks"), cfg.shingle_k).alias("shingles")
+    ))
     assert arrow.keys() == jvm.keys()
     for k in arrow:
         assert abs(arrow[k] - jvm[k]) < 1e-12
