@@ -272,22 +272,17 @@ def q_dedup_keep_best(spark, sf_dir) -> DataFrame:
     (quality, -doc_id) struct rides the same partial-agg shuffle as the
     group stats; no window sort, no second exchange."""
     from microdeduplication_spark.operators.connected_components import (
-        connected_components,
+        cluster_labels,
     )
 
     pairs = q_minhash_lsh_pairs(spark, sf_dir)
-    assign = connected_components(
-        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    )
     d = _docs(spark, sf_dir).select(
         F.col("doc_id").alias("file_id"),
         F.round(ts.quality_score(F.col("text")), 6).alias("quality"),
     )
-    member = d.join(assign, "file_id", "left").select(
-        F.col("file_id").alias("doc_id"),
-        F.coalesce("cluster_id", "file_id").alias("cluster_id"),
-        "quality",
-    )
+    member = cluster_labels(
+        d, pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+    ).withColumnRenamed("file_id", "doc_id")
     return member.groupBy("cluster_id").agg(
         F.max_by(
             F.struct("doc_id", "quality"),
@@ -1180,16 +1175,12 @@ def entry(spark: SparkSession) -> DataFrame:
     sf_dir = "/root/testdata/sf0.001"
     pairs = q_minhash_lsh_pairs(spark, sf_dir)
     from microdeduplication_spark.operators.connected_components import (
-        connected_components,
+        cluster_labels,
     )
 
     edges = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    assign = connected_components(edges)
     docs = _docs(spark, sf_dir).select(F.col("doc_id").alias("file_id"))
-    return docs.join(assign, "file_id", "left").select(
-        F.col("file_id").alias("doc_id"),
-        F.coalesce("cluster_id", "file_id").alias("cluster_id"),
-    )
+    return cluster_labels(docs, edges).withColumnRenamed("file_id", "doc_id")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -87,5 +87,3 @@ class DedupConfig:
     def to_dict(self) -> dict:
         return asdict(self)
 
-
-DEFAULT_CONFIG = DedupConfig()

@@ -112,8 +112,8 @@ def connected_components(
 ) -> DataFrame:
     """edges(src,dst) -> assignments(file_id, cluster_id = component min).
 
-    Nodes that appear in no edge are absent from the output; the caller joins
-    against the full node list and coalesces to self (pipeline.py).
+    Nodes that appear in no edge are absent from the output; cluster_labels
+    labels a full node list.
 
     Edge sets up to `driver_threshold` take the driver fast path
     (_driver_components); larger graphs run the distributed large-star/
@@ -160,3 +160,14 @@ def connected_components(
         cur.select(F.col("dst").alias("file_id"), F.col("dst").alias("cluster_id"))
     )
     return assign.groupBy("file_id").agg(F.min("cluster_id").alias("cluster_id"))
+
+
+def cluster_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """nodes(file_id, ...) + edges(src,dst) -> nodes' columns + cluster_id.
+
+    cluster_id is the component min from connected_components; a node that
+    appears in no edge is its own cluster (cluster_id = file_id)."""
+    assign = connected_components(edges)
+    return nodes.join(assign, "file_id", "left").select(
+        *nodes.columns, F.coalesce("cluster_id", "file_id").alias("cluster_id")
+    )

@@ -32,11 +32,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-PRODUCT_FIELDS = [
-    "id", "name", "sku", "description", "image_url", "prod_url",
-    "price", "currency", "availability", "provider", "time_stamp",
-]
-
 # reference clearLine (Util.java:20-34): strip literal \t/\n, language tags,
 # angle brackets, collapse whitespace
 _LANG_TAG_RE = r"(@|-)(et|en|ru|de|ee)\b"

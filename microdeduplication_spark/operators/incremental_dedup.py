@@ -20,6 +20,11 @@ Scale design (10^12-file corpus, 10^7-10^9-file daily batch):
   expressions (xxhash64 over array slices / bit ops), so no UDF ever
   touches the index scan. Substring fingerprints (the one signature that
   needs the Arrow kernel) are precomputed into `fps` at index time.
+- The match and cluster steps are the one-shot pipeline's own functions:
+  the batch's candidates of every family go through
+  verify.verify_candidates, SimHash candidates through
+  simhash.hamming_filter, and the projected graph through
+  connected_components.cluster_labels.
 - Near-dup candidates run the EXACT one-shot banded_self_join over only
   the buckets the batch touches: the distinct new bucket keys semi-join
   the old band scan map-side (broadcast when the counted key table is
@@ -45,6 +50,9 @@ Scale design (10^12-file corpus, 10^7-10^9-file daily batch):
   the remap and members appends leaves merge rows whose bridge file is not
   yet a member (the retry lands it; the reverse append order would lose
   the merges forever on retry, which is strictly worse).
+- Table rewrites (checkpoint_index, and the streaming sink's bucket
+  compaction) replace a directory through swap_dir, and every reader first
+  runs recover_swaps, which rolls a half-finished swap forward or back.
 """
 
 from __future__ import annotations
@@ -55,6 +63,7 @@ import json
 import os
 import shutil
 from dataclasses import asdict
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,9 +81,12 @@ from microdeduplication_spark.functions.hashing import (
     shingles_sigs,
 )
 from microdeduplication_spark.operators.minhash_lsh import banded_self_join
-from microdeduplication_spark.operators.verify import verify_jaccard
-
-ALL_PASSES = ("minhash", "simhash", "substring")
+from microdeduplication_spark.operators.verify import verify_candidates
+from microdeduplication_spark.pipeline import (
+    ALL_PASSES,
+    check_passes,
+    run_pipeline,
+)
 
 
 def _cfg_hash(cfg: DedupConfig, passes: tuple[str, ...]) -> str:
@@ -146,8 +158,7 @@ def init_index(spark: SparkSession, files: DataFrame, cfg: DedupConfig,
                index_dir: str, passes: tuple[str, ...] = ALL_PASSES):
     """One-shot pipeline over the initial corpus + persist its signature
     state. Returns the PipelineResult of the full run."""
-    from microdeduplication_spark.pipeline import run_pipeline
-
+    check_passes(passes)
     res = run_pipeline(spark, files, cfg, passes=passes)
     norm = res.normalized
 
@@ -182,22 +193,23 @@ def _resolve_remap(spark: SparkSession, index_dir: str) -> dict[int, int]:
     return out
 
 
-def _apply_remap(spark: SparkSession, df: DataFrame,
-                 remap: dict[int, int]) -> DataFrame:
+def _apply_remap(spark: SparkSession, df: DataFrame, remap: dict[int, int],
+                 col: str = "cluster_id") -> DataFrame:
+    """Resolve the cluster ids in column `col` through the merge map."""
     if not remap:
         return df
     rm = spark.createDataFrame(
-        list(remap.items()), "cluster_id long, resolved long"
+        list(remap.items()), f"{col} long, resolved long"
     )
-    return df.join(F.broadcast(rm), "cluster_id", "left").select(
-        *[c for c in df.columns if c != "cluster_id"],
-        F.coalesce("resolved", "cluster_id").alias("cluster_id"),
+    return df.join(F.broadcast(rm), col, "left").select(
+        *[F.coalesce("resolved", col).alias(c) if c == col else F.col(c)
+          for c in df.columns]
     )
 
 
 def read_clusters(spark: SparkSession, index_dir: str) -> DataFrame:
     """(file_id, cluster_id) for the whole indexed corpus, merges resolved."""
-    _recover_index(index_dir)
+    recover_swaps(os.path.join(index_dir, "*"))
     members = spark.read.parquet(os.path.join(index_dir, "members"))
     return _apply_remap(
         spark, members.select("file_id", "cluster_id"),
@@ -205,36 +217,48 @@ def read_clusters(spark: SparkSession, index_dir: str) -> DataFrame:
     )
 
 
-def _recover_index(index_dir: str) -> None:
-    """Roll any half-finished checkpoint_index table swap forward/back
-    (same crash-window protocol as the streaming sink's compaction,
-    streaming/incremental.py:255). Cheap -- two globs when idle."""
-    for old in glob.glob(os.path.join(index_dir, "*.compact_old")):
+def swap_dir(live: str, write_tmp) -> None:
+    """Atomically replace directory `live` via the 4-step rename protocol:
+
+      1. write_tmp(<live>.compact_tmp)       new data, old data still live
+      2. rename <live> -> <live>.compact_old (atomic on one filesystem)
+      3. rename <live>.compact_tmp -> <live> (atomic)
+      4. delete <live>.compact_old           (only after 3)
+
+    recover_swaps converges every crash window."""
+    tmp, old = live + ".compact_tmp", live + ".compact_old"
+    shutil.rmtree(tmp, ignore_errors=True)
+    write_tmp(tmp)
+    os.replace(live, old)
+    os.replace(tmp, live)
+    shutil.rmtree(old)
+
+
+def recover_swaps(pattern: str) -> None:
+    """Roll every half-finished swap_dir of the live dirs matching the glob
+    `pattern` forward or back, so a crash at any step loses no rows:
+
+    - live and old both present (crashed after step 3): drop old;
+    - only old (crashed between 2 and 3): roll forward when the tmp write
+      finished -- Spark writes _SUCCESS at a write's output root only when
+      its job commits -- else roll the old data back;
+    - tmp beside a live dir (crashed before step 2, or left by the rollback
+      above): drop tmp.
+
+    Cheap -- two globs when idle. Idempotent."""
+    for old in glob.glob(pattern + ".compact_old"):
         live = old[: -len(".compact_old")]
         tmp = live + ".compact_tmp"
-        if os.path.exists(live):        # crashed after step 3: finish delete
+        if os.path.isdir(live):
             shutil.rmtree(old)
-        elif os.path.exists(tmp):       # crashed between 2 and 3: roll fwd
-            os.rename(tmp, live)
+        elif os.path.exists(os.path.join(tmp, "_SUCCESS")):
+            os.replace(tmp, live)
             shutil.rmtree(old)
-        else:                           # tmp lost: roll back to the old data
-            os.rename(old, live)
-    for tmp in glob.glob(os.path.join(index_dir, "*.compact_tmp")):
-        if os.path.exists(tmp[: -len(".compact_tmp")]):
-            shutil.rmtree(tmp)          # crashed before step 2: stale tmp
-
-
-def _swap_table(index_dir: str, table: str, write_tmp) -> None:
-    """Atomically replace an index table dir via the 4-step rename protocol:
-    write tmp (old data stays live) -> live->old -> tmp->live -> delete old.
-    Each rename is atomic on one filesystem; _recover_index converges every
-    crash window."""
-    live = os.path.join(index_dir, table)
-    tmp, old = live + ".compact_tmp", live + ".compact_old"
-    write_tmp(tmp)                       # step 1
-    os.rename(live, old)                 # step 2
-    os.rename(tmp, live)                 # step 3
-    shutil.rmtree(old)                   # step 4
+        else:
+            os.replace(old, live)
+    for tmp in glob.glob(pattern + ".compact_tmp"):
+        if os.path.isdir(tmp[: -len(".compact_tmp")]):
+            shutil.rmtree(tmp)
 
 
 def checkpoint_index(spark: SparkSession, index_dir: str,
@@ -251,12 +275,12 @@ def checkpoint_index(spark: SparkSession, index_dir: str,
     the deployment's corpus size.
 
     Crash-safe and idempotent under the single-writer assumption (one
-    increment/checkpoint at a time): tables swap via _swap_table and remap
+    increment/checkpoint at a time): tables swap via swap_dir and remap
     clears LAST, so a crash anywhere leaves reads correct -- remap ids map
     strictly downward (a merge's new id is the CC min, always below the old
     id), so the chain is acyclic and re-applying remap to already-resolved
     members is a no-op."""
-    _recover_index(index_dir)
+    recover_swaps(os.path.join(index_dir, "*"))
     remap = _resolve_remap(spark, index_dir)
 
     # the tmp write (step 1) runs while the live dir is still in place, so
@@ -264,21 +288,23 @@ def checkpoint_index(spark: SparkSession, index_dir: str,
     members = _apply_remap(
         spark, spark.read.parquet(os.path.join(index_dir, "members")), remap
     ).repartition(n_partitions)
-    _swap_table(index_dir, "members",
-                lambda tmp: members.write.parquet(tmp))
+    swap_dir(os.path.join(index_dir, "members"),
+             lambda tmp: members.write.parquet(tmp))
 
     reps = spark.read.parquet(os.path.join(index_dir, "reps")) \
         .repartition(n_partitions)
-    _swap_table(index_dir, "reps", lambda tmp: reps.write.parquet(tmp))
+    swap_dir(os.path.join(index_dir, "reps"),
+             lambda tmp: reps.write.parquet(tmp))
 
     # the reset goes through the same atomic swap as the row tables: a
     # plain overwrite deletes the live dir before the new commit lands, and
     # a crash in that window leaves remap/ unreadable with nothing to roll
-    # it forward (the review's one unprotected window)
+    # it forward
     empty = spark.createDataFrame(
         [], "old_cluster_id long, new_cluster_id long"
     )
-    _swap_table(index_dir, "remap", lambda tmp: empty.write.parquet(tmp))
+    swap_dir(os.path.join(index_dir, "remap"),
+             lambda tmp: empty.write.parquet(tmp))
 
 
 def _affected_band_pairs(new_bands: DataFrame, old_bands: DataFrame,
@@ -332,8 +358,9 @@ def dedup_increment(
 
     Cluster ids returned are fully resolved (post-merge); a bridge file
     that merges two existing clusters appends the merge to remap/."""
+    check_passes(passes)
     _check_manifest(index_dir, cfg, passes)
-    _recover_index(index_dir)
+    recover_swaps(os.path.join(index_dir, "*"))
 
     members = spark.read.parquet(os.path.join(index_dir, "members"))
     reps_idx = spark.read.parquet(os.path.join(index_dir, "reps"))
@@ -371,13 +398,13 @@ def dedup_increment(
     feats_new = _rep_features(reps_new, cfg, passes) \
         .localCheckpoint(eager=False)
 
-    near_cands: list[DataFrame] = []
+    cands: list[DataFrame] = []
     if "minhash" in passes:
         bands_new = minhash_lsh.lsh_bands(
             feats_new.select("file_id", "sig"), cfg)
         bands_old = minhash_lsh.lsh_bands(
             reps_idx.select("file_id", "sig"), cfg)
-        near_cands.append(_affected_band_pairs(
+        cands.append(_affected_band_pairs(
             bands_new, bands_old, cfg, "minhash", broadcast_threshold))
     if "simhash" in passes:
         sims_new = feats_new.select("file_id", "sim")
@@ -390,97 +417,54 @@ def dedup_increment(
         all_sims = sims_new.unionByName(
             reps_idx.select("file_id", "sim")
         ).localCheckpoint(eager=False)
-        a_sim = all_sims.select(F.col("file_id").alias("a_id"),
-                                F.col("sim").alias("a_sim"))
-        b_sim = all_sims.select(F.col("file_id").alias("b_id"),
-                                F.col("sim").alias("b_sim"))
-        near_cands.append(
-            ham_cands.join(a_sim, "a_id").join(b_sim, "b_id")
-            .where(F.bit_count(F.col("a_sim").bitwiseXOR(F.col("b_sim")))
-                   <= F.lit(cfg.hamming_threshold))
-            .select("a_id", "b_id", "method")
-        )
-    sub_cands = None
+        cands.append(simhash_op.hamming_filter(ham_cands, all_sims, cfg))
+    line_all = None
     if "substring" in passes:
-        fps_new = feats_new.select(
-            "file_id", F.explode("fps").alias("band_hash")
-        ).withColumn("band_idx", F.lit(0))
-        fps_old = reps_idx.select(
-            "file_id", F.explode("fps").alias("band_hash")
-        ).withColumn("band_idx", F.lit(0))
-        sub_cands = _affected_band_pairs(
-            fps_new, fps_old, cfg, "substring", broadcast_threshold)
+        cands.append(_affected_band_pairs(
+            substring.fingerprint_bands(feats_new, "fps"),
+            substring.fingerprint_bands(reps_idx, "fps"),
+            cfg, "substring", broadcast_threshold))
+        line_all = feats_new.select("file_id", "line_set").unionByName(
+            reps_idx.select("file_id", "line_set"))
 
-    # ---- verification ---------------------------------------------------
+    # ---- verification: the one-shot verify over every family's pairs ----
+    candidates = reduce(DataFrame.unionByName, cands)
     shingle_all = feats_new.select("file_id", "shingles").unionByName(
         reps_idx.select("file_id", "shingles")
     )
-    ver_parts: list[DataFrame] = []
-    if near_cands:
-        sim_cands = near_cands[0]
-        for p in near_cands[1:]:
-            sim_cands = sim_cands.unionByName(p)
-        sim_cands = sim_cands.groupBy("a_id", "b_id").agg(
-            F.min("method").alias("method"))
-        ver_parts.append(verify_jaccard(sim_cands, shingle_all, cfg))
-    if sub_cands is not None:
-        line_all = feats_new.select("file_id", "line_set").unionByName(
-            reps_idx.select("file_id", "line_set")
-        )
-        ver_parts.append(
-            substring.verify_containment(sub_cands, line_all, cfg))
-    verified = None
-    if ver_parts:
-        verified = ver_parts[0]
-        for p in ver_parts[1:]:
-            verified = verified.unionByName(p)
+    verified = verify_candidates(candidates, shingle_all, line_all, cfg)
 
     # ---- clustering: CC over batch edges projected onto old cluster ids -
-    edges = known_edges.unionByName(exact_edges_new)
-    if verified is not None:
-        edges = edges.unionByName(
-            verified.select(F.col("a_id").alias("src"),
-                            F.col("b_id").alias("dst")))
-    # project old endpoints onto their CLUSTER id so CC never sees the
-    # corpus: edge count stays O(batch), merges surface as components
+    edges = known_edges.unionByName(exact_edges_new).unionByName(
+        verified.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+    )
+    # project old endpoints onto their resolved CLUSTER id so CC never sees
+    # the corpus: edge count stays O(batch), merges surface as components
     # containing several old cluster ids
     old_cid = members.select("file_id", F.col("cluster_id").alias("_cid"))
     remap_now = _resolve_remap(spark, index_dir)
+    for col in ("src", "dst"):
+        edges = edges.join(
+            old_cid.withColumnRenamed("file_id", col), col, "left"
+        ).select(*[F.coalesce("_cid", c).alias(c) if c == col else F.col(c)
+                   for c in ("src", "dst")])
+        edges = _apply_remap(spark, edges, remap_now, col)
+    # two consumers (CC and the node list)
+    edges = edges.where(F.col("src") != F.col("dst")) \
+        .localCheckpoint(eager=False)
 
-    def proj(edges_df: DataFrame, col: str) -> DataFrame:
-        e = edges_df.join(old_cid.withColumnRenamed("file_id", col),
-                          col, "left")
-        return e.select(
-            *[F.coalesce("_cid", c).alias(c) if c == col else F.col(c)
-              for c in ("src", "dst")]
-        )
-
-    edges = proj(proj(edges, "src"), "dst").where(F.col("src") != F.col("dst"))
-    if remap_now:
-        rm = spark.createDataFrame(list(remap_now.items()),
-                                   "old long, new long")
-        for col in ("src", "dst"):
-            edges = edges.join(
-                F.broadcast(rm).withColumnRenamed("old", col), col, "left"
-            ).select(
-                F.coalesce("new", "src").alias("src") if col == "src"
-                else F.col("src"),
-                F.coalesce("new", "dst").alias("dst") if col == "dst"
-                else F.col("dst"),
-            )
-        edges = edges.where(F.col("src") != F.col("dst"))
-    assign = cc.connected_components(edges)
-
+    # every graph node outside the batch is an old cluster id: one labelling
+    # gives the batch its clusters and the old ids their merges
     batch_ids = norm.select("file_id")
-    batch_clusters = batch_ids.join(assign, "file_id", "left").select(
-        "file_id", F.coalesce("cluster_id", "file_id").alias("cluster_id")
-    ).localCheckpoint(eager=False)
-
+    nodes = batch_ids.unionByName(
+        edges.select(F.explode(F.array("src", "dst")).alias("file_id"))
+    ).distinct()
+    labels = cc.cluster_labels(nodes, edges).localCheckpoint(eager=False)
+    batch_clusters = labels.join(batch_ids, "file_id", "left_semi")
     # old cluster ids whose component got a new (smaller) id -> remap rows
-    merges = assign.join(
-        members.select(F.col("cluster_id").alias("file_id")).distinct(),
-        "file_id", "left_semi",
-    ).where(F.col("file_id") != F.col("cluster_id")).select(
+    merges = labels.join(batch_ids, "file_id", "left_anti").where(
+        F.col("file_id") != F.col("cluster_id")
+    ).select(
         F.col("file_id").alias("old_cluster_id"),
         F.col("cluster_id").alias("new_cluster_id"),
     )

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from microdeduplication_spark.operators.connected_components import (
-    connected_components,
+    cluster_labels,
 )
 from microdeduplication_spark.operators.entity_formation import blocking_key
 from microdeduplication_spark.operators.snm import (
@@ -150,13 +150,11 @@ def snm_dedup(
         pairs.select(F.col("a_pos").alias("a_id"), F.col("b_pos").alias("b_id")),
         prods_by_pos,
     )
-    assign = connected_components(
-        matched.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    )
-    all_pos = pos.select(F.col("pos").alias("file_id"))
-    full = all_pos.join(assign, "file_id", "left").select(
-        F.col("file_id").alias("pos"),
-        F.coalesce("cluster_id", "file_id").alias("cluster_pos"),
+    full = cluster_labels(
+        pos.select(F.col("pos").alias("file_id")),
+        matched.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst")),
+    ).select(
+        F.col("file_id").alias("pos"), F.col("cluster_id").alias("cluster_pos")
     )
     id_of_pos = pos.select("pos", "id")
     clusters = (

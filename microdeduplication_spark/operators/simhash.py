@@ -111,6 +111,14 @@ def candidate_pairs(
     sims = sims.localCheckpoint(eager=False)
     bands = simhash_bands(sims, cfg)
     cands = banded_self_join(bands, cfg, method="simhash", exact_hot=exact_hot)
+    return hamming_filter(cands, sims, cfg)
+
+
+def hamming_filter(cands: DataFrame, sims: DataFrame,
+                   cfg: DedupConfig) -> DataFrame:
+    """Exact Hamming rescore: the (a_id, b_id, method) candidates whose
+    signatures in `sims` (file_id, sim) differ in at most hamming_threshold
+    bits. `sims` is read by both join sides, so callers pin it first."""
     a_sim = sims.select(F.col("file_id").alias("a_id"), F.col("sim").alias("a_sim"))
     b_sim = sims.select(F.col("file_id").alias("b_id"), F.col("sim").alias("b_sim"))
     return (

@@ -11,8 +11,9 @@ candidates. A file A embedded verbatim in a larger file B shares every
 window of A (>= 1 as long as |A| >= w lines), even when their whole-file
 Jaccard is below the near-dup threshold.
 
-Verification is *containment*, not Jaccard: |lines(A) cap lines(B)| /
-min(|lines(A)|, |lines(B)|) >= containment_threshold, over distinct line sets.
+Verification (verify.verify_containment) is *containment*, not Jaccard:
+|lines(A) cap lines(B)| / min(|lines(A)|, |lines(B)|) >= containment_threshold,
+over distinct line sets.
 
 Scale notes: fingerprints are 8-byte hashes, (n_lines - w + 1) per file;
 explode -> groupBy uses one shuffle on the fingerprint key; the shared
@@ -29,6 +30,9 @@ from pyspark.sql import functions as F
 from microdeduplication_spark.config import DedupConfig
 from microdeduplication_spark.functions.text import line_hashes
 from microdeduplication_spark.operators.minhash_lsh import banded_self_join
+# the containment verify lives with the Jaccard one; substring callers keep
+# reaching it here
+from microdeduplication_spark.operators.verify import verify_containment
 
 
 def line_hash_sets(reps: DataFrame) -> DataFrame:
@@ -64,8 +68,14 @@ def window_fingerprints(lined: DataFrame, cfg: DedupConfig) -> DataFrame:
     from microdeduplication_spark.functions.hashing import make_window_fp_udf
 
     fp = make_window_fp_udf(cfg.substr_window, cfg.substr_winnow)
-    return lined.select(
-        "file_id", F.explode(fp(F.col("lines"))).alias("band_hash")
+    return fingerprint_bands(lined, fp(F.col("lines")))
+
+
+def fingerprint_bands(df: DataFrame, fps) -> DataFrame:
+    """(file_id, band_hash, band_idx=0): one row per element of `fps`, an
+    array<long> fingerprint column of `df` or an expression over it."""
+    return df.select(
+        "file_id", F.explode(fps).alias("band_hash")
     ).withColumn("band_idx", F.lit(0))
 
 
@@ -73,48 +83,6 @@ def candidate_pairs(lined: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Files sharing >= 1 window fingerprint -> (a_id, b_id, method='substring')."""
     fps = window_fingerprints(lined, cfg)
     return banded_self_join(fps, cfg, method="substring")
-
-
-def verify_containment(
-    candidates: DataFrame, lined: DataFrame, cfg: DedupConfig
-) -> DataFrame:
-    """Exact line-set containment check -> (a_id, b_id, method, score).
-
-    score = |A cap B| / min(|A|, |B|) on distinct line-hash sets; JVM-side
-    array_intersect, no Python.
-    """
-    # semi-join reduction: filter the wide line-set table to candidate ids
-    # before the pair joins (same plan shape as verify.verify_jaccard)
-    # compute-once for the 3 candidate consumers (ids union x2 + probe):
-    # see verify.verify_jaccard for the measured duplication this avoids
-    candidates = candidates.localCheckpoint(eager=False)
-    # drop the ordered `lines` column (and anything else) before the
-    # checkpoint below -- containment reads only the distinct line_set
-    lined = lined.select("file_id", "line_set")
-    ids = (
-        candidates.select(F.col("a_id").alias("file_id"))
-        .unionByName(candidates.select(F.col("b_id").alias("file_id")))
-        .distinct()
-    )
-    # localCheckpoint (lazy), not persist: see verify.verify_jaccard -- same
-    # compute-once contract without leaking a plan-keyed CacheManager entry
-    reduced = lined.join(F.broadcast(ids), "file_id", "left_semi") \
-        .localCheckpoint(eager=False)
-    sets_a = reduced.select(
-        F.col("file_id").alias("a_id"), F.col("line_set").alias("a_set")
-    )
-    sets_b = reduced.select(
-        F.col("file_id").alias("b_id"), F.col("line_set").alias("b_set")
-    )
-    inter = F.size(F.array_intersect("a_set", "b_set"))
-    denom = F.least(F.size("a_set"), F.size("b_set"))
-    return (
-        candidates.join(sets_a, "a_id")
-        .join(sets_b, "b_id")
-        .withColumn("score", inter / denom)
-        .where(F.col("score") >= F.lit(cfg.containment_threshold))
-        .select("a_id", "b_id", "method", "score")
-    )
 
 
 def substring_pairs_md5_family(

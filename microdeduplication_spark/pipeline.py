@@ -5,15 +5,17 @@ Stage graph (SURVEY.md §3 "new-engine lifecycle"):
     ingest_normalize -> exact_dedup(norm_sha)
         -> shingles (ONE Arrow pass: shingles + MinHash sig + SimHash sim)
         -> [minhash_lsh | simhash | substring]   (on exact representatives)
-        -> candidate_union -> verify (jaccard / containment)
-        -> (+ exact star edges) -> connected_components -> clusters
+        -> candidate_union -> verify.verify_candidates (jaccard / containment)
+        -> (+ exact star edges) -> connected_components.cluster_labels
 
 Each stage is a pure DataFrame->DataFrame function (operators/*); this module
 only composes them, materializes each stage, and records the lineage
 manifest (north_rule: "resumable from checkpoint with per-partition lineage
 + metrics"). Signatures come from functions/hashing.shingles_sigs, the one
 Python entry for shingles, MinHash and SimHash; the candidate stages read
-the signatures as projections of the shingles stage.
+the signatures as projections of the shingles stage. The daily increment
+(operators/incremental_dedup.dedup_increment) runs the same verify, Hamming
+filter and cluster labelling functions on its batch-vs-index candidates.
 
 Stage materialization has two policies behind one call, _Checkpointer.run:
 
@@ -41,6 +43,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,6 +60,16 @@ from microdeduplication_spark.operators import (
 from microdeduplication_spark.functions.hashing import shingles_sigs
 
 ALL_PASSES = ("minhash", "simhash", "substring")
+
+
+def check_passes(passes: tuple[str, ...]) -> None:
+    """Raise ValueError on an empty pass set or a name outside ALL_PASSES
+    (a misspelled pass would otherwise be skipped silently)."""
+    unknown = sorted(set(passes) - set(ALL_PASSES))
+    if unknown:
+        raise ValueError(f"unknown pass(es) {unknown}; passes are {ALL_PASSES}")
+    if not passes:
+        raise ValueError(f"at least one pass required from {ALL_PASSES}")
 
 
 @dataclass
@@ -250,6 +263,7 @@ def run_pipeline(
     """
     if eager_metrics != "count":
         raise ValueError(f"eager_metrics must be 'count', got {eager_metrics!r}")
+    check_passes(passes)
     cfg = cfg or DedupConfig()
     # the layout token folded into the config hash refuses checkpoint dirs
     # written by an earlier stage layout (clean rebuild) instead of
@@ -257,9 +271,6 @@ def run_pipeline(
     # stages project sig/sim from "shingles"
     ck = _Checkpointer(spark, checkpoint_dir, cfg,
                        extra_key=tuple(passes) + ("stage-layout-v3",))
-
-    if not any(p in passes for p in ALL_PASSES):
-        raise ValueError("at least one pass required")
 
     # ---- level 0: ingest ------------------------------------------------
     normalized = ck.run(
@@ -352,47 +363,30 @@ def run_pipeline(
         )
         cand_stage_names.append("cand_simhash")
 
-    candidates = cand_parts[0]
-    for p in cand_parts[1:]:
-        candidates = candidates.unionByName(p)
+    candidates = reduce(DataFrame.unionByName, cand_parts)
 
-    # verify each (a,b) once; candidate provenance kept as a joined-back method
-    sim_cands = (
-        candidates.where(F.col("method") != "substring")
-        .groupBy("a_id", "b_id")
-        .agg(F.min("method").alias("method"))
-    )
-    ver_parts = [verify.verify_jaccard(sim_cands, shingled, cfg)]
-    if lined is not None:
-        sub_cands = candidates.where(F.col("method") == "substring").select(
-            "a_id", "b_id", "method"
-        )
-        ver_parts.append(substring.verify_containment(sub_cands, lined, cfg))
-    verified = ver_parts[0]
-    for p in ver_parts[1:]:
-        verified = verified.unionByName(p)
     # 'verified' consumes every active cand_* stage: rebuilding any of them
     # (or toggling a pass -- also folded into cfg_hash) invalidates it
-    verified = ck.run("verified", lambda: verified,
-                      ["shingles"] + cand_stage_names)
+    verified = ck.run(
+        "verified",
+        lambda: verify.verify_candidates(candidates, shingled, lined, cfg),
+        ["shingles"] + cand_stage_names,
+    )
 
     edges = verified.select(
         F.col("a_id").alias("src"), F.col("b_id").alias("dst")
     ).unionByName(ex_edges)
 
-    def _build_clusters() -> DataFrame:
-        assign = cc.connected_components(edges)
-        all_ids = normalized.select("file_id").distinct()
-        return all_ids.join(assign, "file_id", "left").select(
-            "file_id",
-            F.coalesce("cluster_id", "file_id").alias("cluster_id"),
-        )
-
     # the clusters build runs driver-side actions (connected components),
     # so its inputs must be materialized before build() executes
     ck.wait("verified", "exact_edges")
     spark.sparkContext.setJobDescription("stage:clusters")
-    clusters = ck.run("clusters", _build_clusters, ["verified", "exact_edges"])
+    clusters = ck.run(
+        "clusters",
+        lambda: cc.cluster_labels(normalized.select("file_id").distinct(),
+                                  edges),
+        ["verified", "exact_edges"],
+    )
     spark.sparkContext.setJobDescription(None)
     ck.sync()
 

@@ -30,13 +30,16 @@ from __future__ import annotations
 import glob
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from microdeduplication_spark.config import DedupConfig
 from microdeduplication_spark.operators.exact_dedup import ingest_normalize
+from microdeduplication_spark.operators.incremental_dedup import (
+    recover_swaps,
+    swap_dir,
+)
 from microdeduplication_spark.sources.files_source import FILES_SCHEMA
 
 MANIFEST_NAME = "_sink_manifest.json"
@@ -99,12 +102,12 @@ def adopt_manifest(sink_dir: str, n_buckets: int) -> None:
 
 
 def _live_bucket_dirs(sink_dir: str) -> list[str]:
-    """Live key_bucket=N partition dirs -- excludes half-finished
-    .compact_tmp/.compact_old compaction state."""
+    """Live key_bucket=N partition dirs -- excludes the tmp/old dirs of a
+    half-finished compaction swap (incremental_dedup.swap_dir)."""
     return [
         d
         for d in glob.glob(os.path.join(sink_dir, "key_bucket=*"))
-        if not d.endswith((".compact_tmp", ".compact_old"))
+        if d.rsplit("=", 1)[1].isdigit()
     ]
 
 
@@ -114,7 +117,7 @@ def read_sink_buckets(spark: SparkSession, sink_dir: str, buckets: list[int]):
     directories are never opened).
 
     Listing the whole sink root would also sweep in any half-finished
-    key_bucket=N.compact_tmp/.compact_old compaction dirs (whose non-integer
+    compaction swap dirs (key_bucket=N.<suffix>, whose non-integer
     partition values break key_bucket type inference and whose rows would
     double-count); scoping the scan to the live partition dirs makes the
     sink readable regardless of compaction state (ADVICE r4)."""
@@ -165,9 +168,9 @@ def stream_ingest(
     """
     # roll any half-finished compaction forward/back BEFORE the first batch:
     # a crash mid-compaction followed by a stream restart must not leave a
-    # bucket's rows hidden in .compact_old where the idempotence anti-join
-    # would miss them and re-append duplicates (ADVICE r4)
-    _recover_compaction(sink_dir)
+    # bucket's rows hidden in the swap's old dir where the idempotence
+    # anti-join would miss them and re-append duplicates (ADVICE r4)
+    recover_swaps(os.path.join(sink_dir, "key_bucket=*"))
     check_or_write_manifest(sink_dir, n_buckets)
 
     def _sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -218,64 +221,26 @@ def compact_sink_buckets(
     the MERGE-less sink design (an Iceberg `rewrite_data_files` would be the
     drop-in upgrade); run it between triggers or from a scheduled job.
 
-    Restart safety (crash at ANY point loses no rows and a re-run converges):
-      1. write compacted rows to  <bucket>.compact_tmp   (new data, old live)
-      2. rename <bucket> -> <bucket>.compact_old         (atomic on one fs)
-      3. rename <bucket>.compact_tmp -> <bucket>         (atomic)
-      4. delete <bucket>.compact_old                     (only after 3)
-    _recover_compaction() rolls any half-finished state forward/back before
-    touching anything: tmp-without-swap is discarded (old data still live);
-    old-moved-but-new-not-in is completed (tmp has a full copy) or rolled
-    back. Idempotent: re-running on a compacted sink is a no-op.
+    Restart safety: each bucket is replaced through
+    incremental_dedup.swap_dir, and recover_swaps rolls any half-finished
+    swap forward or back before touching anything, so a crash at any point
+    loses no rows and a re-run converges. Idempotent: re-running on a
+    compacted sink is a no-op.
     """
-    _recover_compaction(sink_dir)
+    recover_swaps(os.path.join(sink_dir, "key_bucket=*"))
     stats = {"buckets_seen": 0, "buckets_compacted": 0, "files_removed": 0}
-    for bucket in sorted(glob.glob(os.path.join(sink_dir, "key_bucket=*"))):
-        if bucket.endswith(".compact_tmp") or bucket.endswith(".compact_old"):
-            continue
+    for bucket in sorted(_live_bucket_dirs(sink_dir)):
         stats["buckets_seen"] += 1
         files = glob.glob(os.path.join(bucket, "*.parquet"))
         if len(files) <= max_files_per_bucket:
             continue
-        tmp, old = bucket + ".compact_tmp", bucket + ".compact_old"
-        shutil.rmtree(tmp, ignore_errors=True)
         # one output file per bucket: buckets are sized by n_buckets to be
         # modest (a 100TB sink raises n_buckets, not per-bucket file size)
-        spark.read.parquet(bucket).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        os.replace(bucket, old)
-        os.replace(tmp, bucket)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_dir(bucket, lambda tmp: spark.read.parquet(bucket).coalesce(1)
+                 .write.parquet(tmp))
         stats["buckets_compacted"] += 1
         stats["files_removed"] += len(files) - 1
     return stats
-
-
-def _recover_compaction(sink_dir: str) -> None:
-    """Roll half-finished compactions to a consistent state (see
-    compact_sink_buckets docstring for the crash-window analysis)."""
-    for old in glob.glob(os.path.join(sink_dir, "key_bucket=*.compact_old")):
-        bucket = old[: -len(".compact_old")]
-        if os.path.isdir(bucket):
-            # crashed after step 3: swap done, cleanup pending
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            # crashed between 2 and 3: finish with tmp if complete, else
-            # roll the original back
-            tmp = bucket + ".compact_tmp"
-            if os.path.isdir(tmp) and os.path.exists(
-                os.path.join(tmp, "_SUCCESS")
-            ):
-                os.replace(tmp, bucket)
-                shutil.rmtree(old, ignore_errors=True)
-            else:
-                os.replace(old, bucket)
-    for tmp in glob.glob(os.path.join(sink_dir, "key_bucket=*.compact_tmp")):
-        # crashed before step 2 (old data still live) or leftover after
-        # recovery above: the tmp copy is redundant either way
-        if os.path.isdir(tmp[: -len(".compact_tmp")]):
-            shutil.rmtree(tmp, ignore_errors=True)
 
 
 def streaming_dup_counter(spark: SparkSession, input_dir: str, cfg: DedupConfig):

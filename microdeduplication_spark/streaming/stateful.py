@@ -23,11 +23,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-import importlib.util
 
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 from microdeduplication_spark.config import DedupConfig
 from microdeduplication_spark.operators.exact_dedup import ingest_normalize
@@ -81,9 +79,6 @@ def make_first_seen_fn(state_ttl_ms: int | None = None):
 
     return first_seen_fn
 
-
-# lifetime-exact handler (back-compat import surface)
-_first_seen_fn = make_first_seen_fn(None)
 
 
 ROCKSDB_PROVIDER = (
@@ -179,105 +174,3 @@ def streaming_first_seen(
         )
     with _state_store_provider(spark, state_store):
         return writer.queryName("first_seen").start()
-
-
-# --- transformWithStateInPandas variant (Spark 4 arbitrary-state API) ----
-
-
-def _has_protobuf() -> bool:
-    """find_spec('google.protobuf') raises ModuleNotFoundError when even the
-    parent 'google' namespace package is absent (this container)."""
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-class FirstSeenProcessor(StatefulProcessor):
-    """First-seen dedup as a Spark-4 StatefulProcessor.
-
-    Same semantics as make_first_seen_fn, on the modern engine surface:
-      * state is a typed ValueState in the (RocksDB-backed) state store --
-        at 10^12 keys the per-key booleans live on executor LOCAL DISK with
-        a block-cache in memory, instead of the HDFSBackedStateStore's
-        all-in-heap map, so state size is bounded by disk not heap;
-      * TTL is NATIVE: getValueState(ttlDurationMs=...) expires idle
-        entries inside the store (no hand-rolled timeout callback, no
-        eviction branch to get wrong);
-      * TTL refresh-on-activity = re-update()ing the value on suppressed
-        duplicates, matching the applyInPandasWithState variant.
-
-    transformWithState requires the RocksDB provider; streaming_first_seen_tws
-    below sets it for the query start.
-    """
-
-    def __init__(self, state_ttl_ms: int | None = None):
-        self.state_ttl_ms = state_ttl_ms
-
-    def init(self, handle) -> None:
-        self._seen = handle.getValueState(
-            "seen", STATE_SCHEMA, ttlDurationMs=self.state_ttl_ms
-        )
-
-    def handleInputRows(self, key, rows, timer_values):
-        if self._seen.exists():
-            if self.state_ttl_ms is not None:
-                self._seen.update((True,))  # activity refreshes the TTL
-            return iter(())
-        first = _min_id_row(rows)
-        self._seen.update((True,))
-        if first is None:
-            return iter(())
-        return iter([first[["norm_sha", "file_id", "repo", "path"]]])
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_first_seen_tws(
-    spark: SparkSession, input_dir: str, cfg: DedupConfig,
-    state_ttl_ms: int | None = None,
-):
-    """streaming_first_seen on transformWithStateInPandas + RocksDB.
-
-    CONTAINER-GATED: the transformWithState state protocol speaks protobuf
-    between the Python worker and the JVM state server
-    (pyspark/sql/streaming/proto/StateMessage_pb2), so this surface needs
-    `google.protobuf` at runtime -- absent here, present on any standard
-    Spark 4 cluster image. The processor logic itself (FirstSeenProcessor)
-    is protobuf-free and unit-tested; this wrapper raises a clear
-    ImportError instead of crashing the TWS driver worker mid-query.
-
-    Same execution-model caveat as the TTL branch of streaming_first_seen:
-    with timeMode='processingTime' the engine constructs a batch every
-    trigger (so TTL sweeps run on idle streams) -- the query is paced and
-    callers must poll instead of processAllAvailable. timeMode='none'
-    (state_ttl_ms=None) behaves like any data-driven stream."""
-    if not _has_protobuf():
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf (the "
-            "TWS state-server protocol); not installed in this "
-            "environment -- use streaming_first_seen(state_store="
-            "'rocksdb', state_ttl_ms=...) for the same semantics"
-        )
-    stream = (
-        spark.readStream.schema(FILES_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
-    normalized = ingest_normalize(stream, cfg).select(
-        "norm_sha", "file_id", "repo", "path"
-    )
-    deduped = normalized.groupBy("norm_sha").transformWithStateInPandas(
-        FirstSeenProcessor(state_ttl_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="processingTime" if state_ttl_ms is not None else "none",
-    )
-    writer = deduped.writeStream.outputMode("append").format("memory")
-    if state_ttl_ms is not None:
-        writer = writer.trigger(
-            processingTime=f"{max(state_ttl_ms // 2, 100)} milliseconds"
-        )
-    with _state_store_provider(spark, "rocksdb"):
-        return writer.queryName("first_seen_tws").start()

@@ -14,8 +14,9 @@ from microdeduplication_spark.operators.incremental_dedup import (
     dedup_increment,
     init_index,
     read_clusters,
+    recover_swaps,
 )
-from microdeduplication_spark.pipeline import run_pipeline
+from microdeduplication_spark.pipeline import ALL_PASSES, run_pipeline
 
 
 def _partition(df) -> set[frozenset]:
@@ -32,25 +33,49 @@ def corpus():
     return make_corpus(n_files=240, seed=13)
 
 
-def test_incremental_equals_one_shot(spark, cfg, corpus, tmp_path):
+@pytest.mark.parametrize(
+    "passes", [ALL_PASSES, ("minhash",), ("simhash",), ("substring",)],
+    ids=["all", "minhash", "simhash", "substring"],
+)
+def test_incremental_equals_one_shot(spark, cfg, corpus, tmp_path, passes):
     """init(A) + increment(B) produces the SAME cluster partition as one
-    run over A+B -- the central contract: old cluster state + new edges is
-    CC-equivalent to all edges, and the batch-vs-index candidate joins
-    find every cross pair the self-join would."""
+    run over A+B, for every pass set -- the central contract: old cluster
+    state + new edges is CC-equivalent to all edges, and the batch-vs-index
+    candidate joins find every cross pair the self-join would."""
     files = files_spark_df(spark, corpus).withColumn(
         "_r", F.xxhash64("path")
     )
     part_a = files.where(F.col("_r") % 5 != 0).drop("_r")
     part_b = files.where(F.col("_r") % 5 == 0).drop("_r")
 
-    full = run_pipeline(spark, files.drop("_r"), cfg)
+    full = run_pipeline(spark, files.drop("_r"), cfg, passes=passes)
     want = _partition(full.clusters)
 
     idx = str(tmp_path / "idx")
-    init_index(spark, part_a, cfg, idx)
-    dedup_increment(spark, part_b, cfg, idx)
+    init_index(spark, part_a, cfg, idx, passes=passes)
+    dedup_increment(spark, part_b, cfg, idx, passes=passes)
     got = _partition(read_clusters(spark, idx))
     assert got == want
+
+
+def test_unknown_or_empty_pass_set_refused(spark, cfg, tmp_path):
+    """A misspelled pass name raises instead of silently skipping that
+    family, in the one-shot run, at index creation (no manifest written)
+    and on an increment; so does an empty pass set."""
+    files = spark.createDataFrame(
+        [("r", "a.py", "c", "py", "x = 1")],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    idx = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="simhsh"):
+        run_pipeline(spark, files, cfg, passes=("minhash", "simhsh"))
+    with pytest.raises(ValueError, match="at least one pass"):
+        run_pipeline(spark, files, cfg, passes=())
+    with pytest.raises(ValueError, match="simhsh"):
+        init_index(spark, files, cfg, idx, passes=("minhash", "simhsh"))
+    assert not os.path.exists(os.path.join(idx, "manifest.json"))
+    with pytest.raises(ValueError, match="simhsh"):
+        dedup_increment(spark, files, cfg, idx, passes=("simhsh",))
 
 
 def test_rep_features_equal_pipeline_projection(spark, cfg, corpus):
@@ -59,7 +84,6 @@ def test_rep_features_equal_pipeline_projection(spark, cfg, corpus):
     pipeline's own stages, row for row, for the same representatives."""
     from microdeduplication_spark.operators import exact_dedup
     from microdeduplication_spark.operators.incremental_dedup import (
-        ALL_PASSES,
         _features_from_result,
         _rep_features,
     )
@@ -199,9 +223,9 @@ def test_checkpoint_folds_remap_and_preserves_partition(spark, cfg, tmp_path):
 
 
 def test_checkpoint_crash_windows_recover(spark, cfg, corpus, tmp_path):
-    """Every crash window of the 4-step table swap converges to a correct
-    index at the next read/increment (mirrors the streaming compactor's
-    recovery contract)."""
+    """Every crash window of the 4-step table swap (swap_dir, shared with
+    the streaming sink's compaction) converges to a correct index through
+    recover_swaps, which every index read runs first."""
     import shutil as _sh
 
     from microdeduplication_spark.operators.incremental_dedup import (
@@ -215,25 +239,45 @@ def test_checkpoint_crash_windows_recover(spark, cfg, corpus, tmp_path):
     want = _partition(read_clusters(spark, idx))
     live = os.path.join(idx, "members")
 
+    pattern = os.path.join(idx, "*")
+
     # crash before step 2: stale tmp beside live -> dropped
     _sh.copytree(live, live + ".compact_tmp")
+    recover_swaps(pattern)
     assert _partition(read_clusters(spark, idx)) == want
     assert not os.path.exists(live + ".compact_tmp")
 
-    # crash between steps 2 and 3: live renamed away, tmp complete -> forward
+    # crash between steps 2 and 3, tmp complete (_SUCCESS) -> forward
     os.rename(live, live + ".compact_old")
     _sh.copytree(live + ".compact_old", live + ".compact_tmp")
+    assert os.path.exists(os.path.join(live + ".compact_tmp", "_SUCCESS"))
+    recover_swaps(pattern)
     assert _partition(read_clusters(spark, idx)) == want
     assert os.path.exists(live) and not os.path.exists(live + ".compact_old")
+    assert not os.path.exists(live + ".compact_tmp")
+
+    # crash between steps 2 and 3, tmp write unfinished (no _SUCCESS) ->
+    # rolled back to the old data, partial tmp dropped
+    os.rename(live, live + ".compact_old")
+    _sh.copytree(live + ".compact_old", live + ".compact_tmp")
+    os.remove(os.path.join(live + ".compact_tmp", "_SUCCESS"))
+    recover_swaps(pattern)
+    assert _partition(read_clusters(spark, idx)) == want
+    assert os.path.exists(os.path.join(live, "_SUCCESS"))
+    assert not os.path.exists(live + ".compact_old")
+    assert not os.path.exists(live + ".compact_tmp")
 
     # crash after step 3 (old not yet deleted) -> old dropped
     _sh.copytree(live, live + ".compact_old")
+    recover_swaps(pattern)
     assert _partition(read_clusters(spark, idx)) == want
     assert not os.path.exists(live + ".compact_old")
 
-    # tmp lost mid-write (only old remains) -> rolled back
+    # tmp lost mid-write (only old remains) -> rolled back, here by the
+    # recovery read_clusters runs itself
     os.rename(live, live + ".compact_old")
     assert _partition(read_clusters(spark, idx)) == want
+    assert os.path.exists(live) and not os.path.exists(live + ".compact_old")
 
 
 def test_increment_crash_before_members_append_retries_clean(

@@ -308,8 +308,10 @@ def test_compact_recovery_rolls_half_finished_states(spark, cfg, tmp_path):
     consistent sink with the full row set (see compact_sink_buckets)."""
     import shutil as sh
 
+    from microdeduplication_spark.operators.incremental_dedup import (
+        recover_swaps,
+    )
     from microdeduplication_spark.streaming.incremental import (
-        _recover_compaction,
         compact_sink_buckets,
     )
 
@@ -330,14 +332,14 @@ def test_compact_recovery_rolls_half_finished_states(spark, cfg, tmp_path):
     # i.e. only when the compaction write truly finished): roll back
     sh.copytree(bucket, bucket + ".compact_tmp")
     os.replace(bucket, bucket + ".compact_old")
-    _recover_compaction(sink)
+    recover_swaps(os.path.join(sink, "key_bucket=*"))
     assert {r["file_id"] for r in spark.read.parquet(sink).collect()} == want
 
     # crash between steps 2 and 3, tmp complete (_SUCCESS): roll forward
     sh.copytree(bucket, bucket + ".compact_tmp")
     open(os.path.join(bucket + ".compact_tmp", "_SUCCESS"), "w").close()
     os.replace(bucket, bucket + ".compact_old")
-    _recover_compaction(sink)
+    recover_swaps(os.path.join(sink, "key_bucket=*"))
     assert {r["file_id"] for r in spark.read.parquet(sink).collect()} == want
 
     # crash after step 3 (cleanup pending): old copy dropped
@@ -640,78 +642,6 @@ def test_first_seen_rocksdb_state_store(spark, cfg, tmp_path):
     except Exception:
         conf_after = None
     assert conf_after == conf_before and conf_after != ROCKSDB_PROVIDER
-
-
-def test_first_seen_processor_unit():
-    """FirstSeenProcessor (transformWithState surface) branch coverage with
-    a duck-typed ValueState -- protobuf-free, so it runs in this container
-    even though the TWS wire protocol does not (see gate test below)."""
-    import pandas as pd
-
-    from microdeduplication_spark.streaming.stateful import FirstSeenProcessor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v, self.updates = None, 0
-
-        def exists(self):
-            return self._v is not None
-
-        def update(self, v):
-            self._v, self.updates = v, self.updates + 1
-
-    class FakeHandle:
-        def __init__(self):
-            self.ttl_asked = "unset"
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            self.ttl_asked = ttlDurationMs
-            self.state = FakeValueState()
-            return self.state
-
-    mk = lambda ids: pd.DataFrame(
-        {"norm_sha": ["s"] * len(ids), "file_id": ids,
-         "repo": ["r"] * len(ids), "path": ["p"] * len(ids)}
-    )
-
-    # unseen key emits min file_id across chunks; native TTL requested
-    p = FirstSeenProcessor(state_ttl_ms=7000)
-    h = FakeHandle()
-    p.init(h)
-    assert h.ttl_asked == 7000
-    out = list(p.handleInputRows(("s",), iter([mk([9, 4]), mk([2])]), None))
-    assert len(out) == 1 and out[0]["file_id"].iloc[0] == 2
-    assert h.state.updates == 1
-
-    # seen key suppresses; with TTL armed, activity refreshes via update()
-    assert list(p.handleInputRows(("s",), iter([mk([5])]), None)) == []
-    assert h.state.updates == 2
-
-    # no-TTL variant: suppressed duplicate does NOT touch the state
-    p2 = FirstSeenProcessor()
-    h2 = FakeHandle()
-    p2.init(h2)
-    assert h2.ttl_asked is None
-    list(p2.handleInputRows(("s",), iter([mk([1])]), None))
-    assert list(p2.handleInputRows(("s",), iter([mk([3])]), None)) == []
-    assert h2.state.updates == 1
-
-
-def test_tws_container_gate(spark, cfg, tmp_path):
-    """transformWithStateInPandas speaks protobuf to the JVM state server;
-    google.protobuf is absent here, so the wrapper must fail fast with a
-    clear ImportError instead of crashing the TWS driver worker."""
-    import pytest
-
-    from microdeduplication_spark.streaming.stateful import (
-        _has_protobuf,
-        streaming_first_seen_tws,
-    )
-
-    if _has_protobuf():
-        pytest.skip("protobuf present: the gate does not apply")
-    with pytest.raises(ImportError, match="protobuf"):
-        streaming_first_seen_tws(spark, str(tmp_path), cfg)
 
 
 def test_state_store_provider_validation(spark):
